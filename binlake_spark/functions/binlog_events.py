@@ -130,7 +130,7 @@ def _enc_lenenc(n: int) -> bytes:
 # --------------------------------------------------------------------- #
 
 
-def decode_event_header(ev: bytes) -> dict:
+def decode_event_header(ev: bytes, checksums: bool | None = None) -> dict:
     """v4 common header (19 bytes): ts, type, server_id, event_len,
     next_pos, flags.
 
@@ -143,17 +143,28 @@ def decode_event_header(ev: bytes) -> dict:
     legal: ``elen == len(ev)`` (checksum off) and ``elen == len(ev) +
     BINLOG_CHECKSUM_LEN`` (CRC32 tail stripped upstream, reported as
     ``checksum_stripped=True``).  Any other mismatch means the stream
-    was mis-framed and must fail loudly, not mis-walk."""
+    was mis-framed and must fail loudly, not mis-walk.
+
+    ``checksums`` narrows that to one form when the caller knows the
+    stream's checksum mode: ``False`` (no CRC32 tails) accepts only
+    ``elen == len(ev)``, so an event 4 bytes short is not mistaken for
+    a stripped one; ``True`` (tails stripped upstream) accepts only
+    ``elen == len(ev) + 4``.  ``None``, the default, accepts either."""
     if len(ev) < EVENT_HEADER_LEN:
         raise ValueError(f"event is {len(ev)} bytes, header needs 19")
     ts, etype, server_id, elen, next_pos, flags = struct.unpack_from(
         "<IBIIIH", ev, 0
     )
-    if elen not in (len(ev), len(ev) + BINLOG_CHECKSUM_LEN):
+    legal = {
+        None: (len(ev), len(ev) + BINLOG_CHECKSUM_LEN),
+        False: (len(ev),),
+        True: (len(ev) + BINLOG_CHECKSUM_LEN,),
+    }[checksums]
+    if elen not in legal:
         raise ValueError(
             f"event header declares {elen} bytes, got {len(ev)} "
-            f"(mis-framed stream — a stripped CRC32 tail would leave "
-            f"exactly len+{BINLOG_CHECKSUM_LEN})"
+            f"(mis-framed stream, checksums={checksums} — a stripped "
+            f"CRC32 tail would leave exactly len+{BINLOG_CHECKSUM_LEN})"
         )
     return {
         "ts": ts, "type": etype, "server_id": server_id,
@@ -476,6 +487,7 @@ def encode_format_description_body() -> bytes:
 def parse_binlog_events(
     events: list[bytes],
     schema_overlay: dict[tuple[str, str], list[dict]] | None = None,
+    checksums: bool | None = None,
 ) -> Iterator[dict]:
     """Walk a contiguous checksum-stripped event run and yield one dict
     per logical item, each tagged ``kind``:
@@ -490,13 +502,14 @@ def parse_binlog_events(
 
     State (table-id → specs from the last TABLE_MAP, current gtid) is
     local to this walk, mirroring the per-connection decode loop of the
-    reference (BinlogWorker's LogDecoder context).
+    reference (BinlogWorker's LogDecoder context).  ``checksums`` is the
+    stream's checksum mode when known (see :func:`decode_event_header`).
     """
     tmaps: dict[int, tuple[str, str, list[ColumnSpec]]] = {}
     cur_sid: str | None = None
     cur_gno: int | None = None
     for idx, ev in enumerate(events):
-        h = decode_event_header(ev)
+        h = decode_event_header(ev, checksums)
         body = ev[EVENT_HEADER_LEN:]
         et = h["type"]
         base = {"evt_idx": idx, "ts": h["ts"], "server_id": h["server_id"]}
@@ -569,6 +582,7 @@ def binlog_rows_stream(
     df,
     frames_col: str = "frames",
     schema_overlay: dict[tuple[str, str], list[dict]] | None = None,
+    checksums: bool | None = None,
 ):
     """Framed binlog blobs → one row per change, in one fused
     ``mapInArrow`` pass (deframe + event walk + row split fused — no
@@ -582,7 +596,8 @@ def binlog_rows_stream(
     ``image``, ``before_image``.  Chain
     ``decode_row_images(out.filter(...), "image", specs)`` per table for
     typed columns — specs come from the caller's schema registry, the
-    same source the overlay names come from.
+    same source the overlay names come from.  ``checksums``: the
+    stream's checksum mode when known (see :func:`decode_event_header`).
     """
     import pyarrow as pa
     from pyspark.sql import types as T
@@ -621,7 +636,7 @@ def binlog_rows_stream(
                 if blob is None:
                     continue
                 events = split_packets(blob)
-                for rec in parse_binlog_events(events, schema_overlay):
+                for rec in parse_binlog_events(events, schema_overlay, checksums):
                     if rec["kind"] != "row":
                         continue
                     take.append(i)

@@ -166,15 +166,15 @@ def regex_list_pattern(patterns: str) -> str:
     """The reference's regex-list normalization
     (AviaterRegexFilter.java:33-55, completionPattern :107-121): split
     on comma, sort longest-first (the foo|foot pitfall), anchor each
-    with ^...$, join with '|'.  Matching is case-insensitive via
-    lowercased targets (filter :57-69) — the PATTERNS are lowercased
-    here for the same reason: the target side is lowercased at match
-    time, so an uppercase literal in a pattern could never match
-    anything (one-sided case folding is a silent drop-everything
-    trap)."""
-    parts = [p.strip().lower() for p in patterns.split(",") if p.strip()]
+    with ^...$, join with '|'.  Matching is case-insensitive: the target
+    is lowercased at match time (filter :57-69) and the pattern carries
+    a ``(?iu)`` flag, so an uppercase literal in a pattern still
+    matches.  Unlike the reference, the pattern TEXT is not lowercased:
+    that would rewrite the negated classes ``\\D \\W \\S \\B`` into
+    ``\\d \\w \\s \\b`` and silently invert what they match."""
+    parts = [p.strip() for p in patterns.split(",") if p.strip()]
     parts.sort(key=len, reverse=True)
-    return "|".join(f"^{p}$" for p in parts)
+    return "(?iu)" + "|".join(f"^{p}$" for p in parts) if parts else ""
 
 
 def filter_regex_list(

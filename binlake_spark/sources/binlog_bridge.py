@@ -52,15 +52,17 @@ def docs_wire_specs() -> list[ColumnSpec]:
     return specs
 
 
-#: per-blob/per-event packing for the synthesized seq.  Budget of the
-#: 62 usable bits: 2^20 rows per ROWS event (a real master batches rows
-#: up to binlog_row_event_max_size — a narrow table easily exceeds the
-#: old 2^12), 2^17 events per blob (spool_dump's max_blob_events
-#: backstop caps blobs at 2^16), and 2^26 ≈ 67M blobs (a 10^10-event
-#: log at 2048 events/blob is ~4.9M).  Each ordinal is guarded with
-#: raise_error below — an overflow must abort the replay, never
-#: silently fold into a neighboring field and corrupt the LWW order.
-_ROW_BITS, _EVT_BITS, _BLOB_BITS = 20, 17, 26
+#: per-blob/per-event packing for the synthesized seq.  seq is a signed
+#: long and the packing adds 1, so the three fields get 62 bits and the
+#: largest seq is exactly 2^62: 2^20 rows per ROWS event (a real master
+#: batches rows up to binlog_row_event_max_size — a narrow table easily
+#: exceeds the old 2^12), 2^17 events per blob (spool_dump's
+#: max_blob_events backstop caps blobs at 2^16), and 2^25 ≈ 33M blobs
+#: (a 10^10-event log at 2048 events/blob is ~4.9M).  Each ordinal is
+#: guarded with raise_error below — an overflow must abort the replay,
+#: never silently fold into a neighboring field and corrupt the LWW
+#: order.
+_ROW_BITS, _EVT_BITS, _BLOB_BITS = 20, 17, 25
 _EVT_SHIFT = _ROW_BITS
 _BLOB_SHIFT = _EVT_BITS + _EVT_SHIFT
 

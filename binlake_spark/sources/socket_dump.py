@@ -610,12 +610,13 @@ def spool_dump(
     # resume AFTER any blobs already spooled here: a reconnecting
     # fetcher must never rename a new blob over one a tailer may have
     # processed by name (the silent-loss path) — ids continue from the
-    # existing maximum
+    # existing maximum.  Ids past 10^8 are wider than the 08d pad, so
+    # the id is every digit between the prefix and the suffix
     existing = [
-        int(f[5:13])
+        int(f[5:-8])
         for f in os.listdir(spool_dir)
         if f.startswith("blob-") and f.endswith(".parquet")
-        and f[5:13].isdigit()
+        and f[5:-8].isdigit()
     ]
     blob_id, total, batch = (max(existing) + 1 if existing else 0), 0, []
 

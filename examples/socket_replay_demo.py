@@ -77,8 +77,11 @@ def main() -> int:
         frames = spark.read.schema(
             "blob_id long, n_events int, first_event long, frames binary"
         ).parquet(spool).select("blob_id", "frames")
+        # the dump negotiated CRC32 and stripped every tail: the walk
+        # accepts only the stripped header form
         env = envelope_from_binlog_rows(binlog_rows_stream(
-            frames, schema_overlay={("shop", "docs"): DOCS_WIRE_OVERLAY}
+            frames, schema_overlay={("shop", "docs"): DOCS_WIRE_OVERLAY},
+            checksums=True,
         ))
         tw = CdcEngine.create_table(os.path.join(work, "wire"), num_buckets=16)
         CdcEngine(tw).run_batch_replay(spark, source_df=env, n_events_hint=n)

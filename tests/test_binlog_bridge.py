@@ -161,31 +161,45 @@ def test_streaming_wire_replay(spark, tmp_path):
         )
 
 
+def _one_change(spark, blob_id: int, evt_idx: int, row_idx: int):
+    """A one-row ``binlog_rows_stream``-shaped docs change at the given
+    ordinals."""
+    from binlake_spark.functions.binlog_decode import encode_row_images
+    from binlake_spark.sources.binlog_bridge import docs_wire_specs
+
+    img = encode_row_images(
+        [{"doc_id": "d1", "payload": b"\x01\x00\x00\x00", "n_tok": 1,
+          "source": "s", "schema_ver": 1}],
+        docs_wire_specs(),
+    )[0]
+    return spark.createDataFrame(
+        [("docs", blob_id, evt_idx, row_idx, "I", 1700000000,
+          "e6954592-8dba-11e6-af0e-fa163e1cf111", 1, bytearray(img))],
+        "table string, blob_id long, evt_idx long, row_idx long,"
+        " op string, ts long, gtid_sid string, gno long, image binary",
+    )
+
+
 def test_seq_packing_overflow_fails_loudly(spark):
     """An ordinal outside its bit budget must ABORT the replay — a
     silent fold into the neighboring seq field would corrupt the LWW
     winner order with no error (a real master can batch >4096 rows into
     one ROWS event; the budget is now 2^20, guarded)."""
-    from binlake_spark.functions.binlog_decode import encode_row_images
-    from binlake_spark.sources.binlog_bridge import docs_wire_specs
-
-    specs = docs_wire_specs()
-    img = encode_row_images(
-        [{"doc_id": "d1", "payload": b"\x01\x00\x00\x00", "n_tok": 1,
-          "source": "s", "schema_ver": 1}],
-        specs,
-    )[0]
-
-    def changes(row_idx: int):
-        return spark.createDataFrame(
-            [("docs", 0, 0, row_idx, "I", 1700000000,
-              "e6954592-8dba-11e6-af0e-fa163e1cf111", 1, bytearray(img))],
-            "table string, blob_id long, evt_idx long, row_idx long,"
-            " op string, ts long, gtid_sid string, gno long, image binary",
-        )
-
-    ok = envelope_from_binlog_rows(changes(4097))  # legal under 2^20 now
+    ok = envelope_from_binlog_rows(_one_change(spark, 0, 0, 4097))  # legal under 2^20 now
     assert ok.collect()[0]["seq"] == 4097 + 1
-    bad = envelope_from_binlog_rows(changes(1 << 20))
+    bad = envelope_from_binlog_rows(_one_change(spark, 0, 0, 1 << 20))
     with pytest.raises(Exception, match="seq packing overflow"):
         bad.collect()
+
+
+def test_seq_packing_max_ordinals_stay_a_positive_long(spark):
+    """The largest ordinals every guard admits must compose to a seq
+    that still fits a signed long: the packing's trailing +1 leaves 62
+    bits for the three fields, so the largest seq is exactly 2^62."""
+    from binlake_spark.sources import binlog_bridge as bb
+
+    top = _one_change(spark, (1 << bb._BLOB_BITS) - 1,
+                      (1 << bb._EVT_BITS) - 1, (1 << bb._ROW_BITS) - 1)
+    seq = envelope_from_binlog_rows(top).collect()[0]["seq"]
+    assert 0 < seq < 1 << 63
+    assert seq == 1 << 62

@@ -147,6 +147,23 @@ def test_event_header_roundtrip_and_length_check():
         decode_event_header(ev[:-1])  # truncated
 
 
+def test_event_header_known_checksum_mode_allows_one_form():
+    """With checksums known to be off there is no CRC32 tail to strip,
+    so an event 4 bytes short is mis-framed, not stripped."""
+    ev = encode_event(XID_EVENT, encode_xid_body(9), ts=1234)
+    short = ev[:-4]
+    assert decode_event_header(short)["checksum_stripped"] is True
+    with pytest.raises(ValueError, match="declares"):
+        decode_event_header(short, checksums=False)
+    assert decode_event_header(ev, checksums=False)["checksum_stripped"] is False
+    # tails known stripped: the unstripped length form is the wrong one
+    assert decode_event_header(short, checksums=True)["checksum_stripped"] is True
+    with pytest.raises(ValueError, match="declares"):
+        decode_event_header(ev, checksums=True)
+    with pytest.raises(ValueError, match="declares"):
+        list(parse_binlog_events([short], checksums=False))
+
+
 def test_event_header_conformant_checksum_master():
     """A REAL CRC32 master's event_len counts the 4-byte tail it
     appends (the loopback fixtures used to exclude it, masking a

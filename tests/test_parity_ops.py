@@ -285,7 +285,7 @@ def test_regex_list_filter_longest_first_anchoring(spark):
 
     # the documented foo|foot pitfall (AviaterRegexFilter.java:44-55):
     # longest-first + ^$ anchors make both exact names match
-    assert regex_list_pattern("foo,foot") == "^foot$|^foo$"
+    assert regex_list_pattern("foo,foot") == "(?iu)^foot$|^foo$"
     df = spark.createDataFrame(
         [("foo",), ("foot",), ("fool",), ("",), (None,)], "tbl string"
     )
@@ -297,14 +297,30 @@ def test_regex_list_filter_longest_first_anchoring(spark):
     # case-insensitive via lowercased target (filter :66-68)
     up = spark.createDataFrame([("FOO",)], "tbl string")
     assert filter_regex_list(up, "foo", "tbl").count() == 1
-    # ...and BOTH sides fold: an uppercase literal in the PATTERN must
-    # match too (one-sided lowering silently dropped every row)
-    assert regex_list_pattern("Orders.*") == "^orders.*$"
+    # ...and an uppercase literal in the PATTERN must match too
+    # (one-sided lowering silently dropped every row)
+    assert regex_list_pattern("Orders.*") == "(?iu)^Orders.*$"
     mixed = spark.createDataFrame(
         [("Orders",), ("ORDERS_2024",), ("other",)], "tbl string"
     )
     kept = [r.tbl for r in filter_regex_list(mixed, "Orders.*", "tbl").collect()]
     assert sorted(kept) == ["ORDERS_2024", "Orders"]
+
+
+def test_regex_list_filter_keeps_negated_classes(spark):
+    """Case folding must not rewrite escapes: lowercasing the pattern
+    text turned ``\\D`` into ``\\d`` and inverted the match."""
+    from binlake_spark.operators.filters import filter_regex_list
+
+    df = spark.createDataFrame([("123",), ("abc",), ("a b",)], "tbl string")
+
+    def kept(pattern):
+        return sorted(r.tbl for r in filter_regex_list(df, pattern, "tbl").collect())
+
+    assert kept(r"\D+") == ["a b", "abc"]
+    assert kept(r"\W*\w+") == ["123", "abc"]
+    assert kept(r"a\Sb") == []
+    assert kept(r"A\sB") == ["a b"]
 
 
 def test_simple_list_filter(spark):

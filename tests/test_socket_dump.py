@@ -435,6 +435,27 @@ def test_spool_resumes_blob_ids_after_reconnect(tmp_path):
     assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
 
 
+def test_spool_resume_parses_ids_wider_than_the_pad(tmp_path):
+    """Ids past 10^8 are written wider than 08d; the resume scan must
+    read every digit, or it restarts numbering too low and renames a
+    new blob over one a tailer already consumed."""
+    d = tmp_path / "spool"
+    d.mkdir()
+    for i in (99_999_999, 100_000_000):
+        (d / f"blob-{i:08d}.parquet").write_bytes(b"consumed-%d" % i)
+    spool_dump(iter([b"a", b"b"]), str(d), events_per_blob=2)
+    assert sorted(os.listdir(d)) == [
+        "blob-100000000.parquet", "blob-100000001.parquet", "blob-99999999.parquet",
+    ]
+    assert (d / "blob-100000000.parquet").read_bytes() == b"consumed-100000000"
+
+    one = tmp_path / "one"
+    one.mkdir()
+    (one / "blob-123456789.parquet").write_bytes(b"x")
+    spool_dump(iter([b"c"]), str(one))
+    assert sorted(os.listdir(one))[-1] == "blob-123456790.parquet"
+
+
 def test_spool_flush_after_and_size_backstop(tmp_path):
     import pyarrow.parquet as pq
 
