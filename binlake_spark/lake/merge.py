@@ -61,6 +61,14 @@ the shape that survives 100×:
 - per-bucket offsets (row counts + max ``_seq``) come from the parquet
   footers of the files just written — driver-side metadata reads, the
   same trick as Iceberg's manifest column stats.  No stats job.
+
+Every writer here — both merges, compaction, tombstone purge, rebucket
+and bootstrap — is one stage → commit inside :meth:`LakeTable._commit`:
+read the snapshot under the table's writer lock, stage bucket files into
+``data/<kind><next version>`` (:func:`_stage`), update the snapshot and
+publish.  Concurrent writers on one table (several stream ids, or
+maintenance during ingest) therefore run one after another, each on the
+snapshot its predecessor committed.
 """
 
 from __future__ import annotations
@@ -68,6 +76,7 @@ from __future__ import annotations
 import glob
 import os
 import time
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -75,7 +84,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from binlake_spark.lake.table import LakeTable
+from binlake_spark.lake.table import DATA_DIR, LakeTable, _bucket_expr
 
 
 @dataclass
@@ -100,6 +109,52 @@ def _footer_stats(path: str, seq_field: str = "_seq") -> tuple[int, int]:
         if col.statistics is not None and col.statistics.has_min_max:
             mx = max(mx, int(col.statistics.max))
     return md.num_rows, mx
+
+
+def _stage(
+    table: LakeTable, df: DataFrame, kind: str, version: int, buckets: Iterable[int]
+) -> tuple[dict[int, tuple[list[str], int, int]], dict[str, int]]:
+    """Write ``df`` (carrying ``_b``) bucket-partitioned under
+    ``data/<kind><version>`` and read back, for each of ``buckets``, its
+    root-relative files, row count and max ``_seq`` from the parquet
+    footers (``([], 0, -1)`` when the write left it empty).  Runs inside
+    :meth:`LakeTable._commit`, so the directory is this writer's alone.
+    Returns ``(staged, {"write_ms", "footer_ms"})``."""
+    out_dir = os.path.join(table.root, DATA_DIR, f"{kind}{version}")
+    tw = time.monotonic()
+    df.write.mode("overwrite").partitionBy("_b").parquet(out_dir)
+    tf = time.monotonic()
+    staged = {}
+    for b in buckets:
+        paths = sorted(glob.glob(os.path.join(out_dir, f"_b={b}", "*.parquet")))
+        stats = [_footer_stats(p) for p in paths]
+        staged[int(b)] = (
+            [os.path.relpath(p, table.root) for p in paths],
+            sum(n for n, _ in stats),
+            max((mx for _, mx in stats), default=-1),
+        )
+    footer_ms = int((time.monotonic() - tf) * 1000)
+    return staged, {"write_ms": int((tf - tw) * 1000), "footer_ms": footer_ms}
+
+
+def _put_files(snap: dict, fmap: str, updates: dict[int, list[str]]) -> None:
+    """Set bucket file lists in ``snap[fmap]`` (``files`` or ``deltas``);
+    an empty list drops the bucket."""
+    files = {int(b): fl for b, fl in snap.get(fmap, {}).items()}
+    for b, fl in updates.items():
+        if fl:
+            files[b] = fl
+        else:
+            files.pop(b, None)
+    snap[fmap] = {str(b): fl for b, fl in sorted(files.items())}
+
+
+def _op_counts(op_col: str) -> list:
+    return [
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum((F.col(op_col) != "D").cast("long")).alias("n_upserts"),
+        F.sum((F.col(op_col) == "D").cast("long")).alias("n_deletes"),
+    ]
 
 
 def merge_into(
@@ -132,243 +187,13 @@ def merge_into(
     delays, the PerformanceUtils analog) are embedded in the committed
     lineage entry.
     """
-    t0 = time.monotonic()
-    snap = table.snapshot()
-    key = snap["key_col"]
-    num_buckets = snap["num_buckets"]
-
-    # -- 1. epoch idempotence guard ------------------------------------- #
-    if epoch_id <= int(snap["epochs"].get(stream_id, -1)):
-        return MergeResult(
-            applied=False, epoch_id=epoch_id, skipped_reason="epoch-already-applied"
-        )
-
-    if "_bucket" not in net.columns:
-        net = net.withColumn(
-            "_bucket", F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-        )
-
-    # -- 2. optional retransmit fence (bucket-monotone sources only) ----- #
-    if enforce_watermark and snap["watermarks"]:
-        wm = table.watermarks_df(spark)
-        net = (
-            net.join(F.broadcast(wm), "_bucket", "left")
-            .filter(F.col(seq_col) > F.coalesce(F.col("_wm"), F.lit(-1)))
-            .drop("_wm")
-        )
-        dirty = None  # fence may empty buckets; recompute
-        bucket_max_seq = None
-
-    own_persist = not assume_persisted
-    if own_persist:
-        net = net.persist()
-    try:
-        # job A: which buckets does this epoch touch, and each bucket's own
-        # incoming max seq? (skipped when the caller already knows from its
-        # metadata job)
-        if dirty is None or bucket_max_seq is None:
-            rows = (
-                net.groupBy("_bucket").agg(F.max(F.col(seq_col)).alias("_mx")).collect()
-            )
-            if dirty is None:
-                dirty = sorted(int(r["_bucket"]) for r in rows)
-            else:
-                dirty = sorted(int(b) for b in dirty)
-            bucket_max_seq = {
-                int(r["_bucket"]): int(r["_mx"]) for r in rows if r["_mx"] is not None
-            }
-        else:
-            dirty = sorted(int(b) for b in dirty)
-        if not dirty:
-            # nothing to apply: still commit the epoch marker so a replay
-            # of this epoch stays a no-op.
-            snap["version"] += 1
-            snap["epochs"][stream_id] = epoch_id
-            snap["lineage"].append(
-                {
-                    "kind": "merge",
-                    "stream_id": stream_id,
-                    "epoch_id": epoch_id,
-                    "version": snap["version"],
-                    "wall_ms": int((time.monotonic() - t0) * 1000),
-                    "n_events": 0,
-                    "n_upserts": 0,
-                    "n_deletes": 0,
-                    "partitions": [],
-                    **(extra_lineage or {}),
-                }
-            )
-            table._write_snapshot(snap)
-            return MergeResult(
-                applied=True,
-                epoch_id=epoch_id,
-                version=snap["version"],
-                skipped_reason="empty-batch",
-            )
-
-        # -- 3. merge body: one job over dirty buckets only --------------- #
-        # Tombstones ride along: `current` includes prior delete
-        # tombstones (they fence stale upserts exactly like live rows —
-        # without them a delete leaves NOTHING to out-sequence an older
-        # upsert delivered later, e.g. when two source files with
-        # colliding mtimes list in either order after a resume, and the
-        # doc silently resurrects), and an applied delete is WRITTEN as
-        # a `_tombstone=true` row instead of vanishing.  User-facing
-        # reads filter them; `purge_tombstones` reclaims them once the
-        # source can no longer deliver older seqs.
-        schema = T.StructType.fromJson(snap["schema"])
-        current = table.read(
-            spark, buckets=dirty, with_seq=True, with_tombstones=True
-        )
-        cur_seq = F.coalesce(F.col("_seq"), F.lit(-1))
-        net_small = net.select(key, F.col(seq_col).alias("_in_seq"))
-
-        # existing rows that survive: no incoming row, or incoming is
-        # stale/equal (LWW keeps the newer version)
-        survivors = (
-            current.join(net_small, key, "left")
-            .filter(F.col("_in_seq").isNull() | (F.col("_in_seq") <= cur_seq))
-            .drop("_in_seq")
-        )
-        # incoming winners beaten by the existing row
-        stale_keys = (
-            current.select(key, "_seq")
-            .join(net_small, key, "inner")
-            .filter(cur_seq >= F.col("_in_seq"))
-            .select(key)
-        )
-        applied = net.join(stale_keys, key, "left_anti")
-
-        obs = Observation(f"merge-{stream_id}-{epoch_id}")
-        applied = applied.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((F.col(op_col) != "D").cast("long")).alias("n_upserts"),
-            F.sum((F.col(op_col) == "D").cast("long")).alias("n_deletes"),
-        )
-        is_del = F.col(op_col) == "D"
-
-        def _aligned_col(f):
-            src = F.col(f.name) if f.name in applied.columns else F.lit(None)
-            if f.name != key:
-                # data columns: NULL on tombstones (the key + _seq are
-                # the whole fence; carrying a deleted doc's payload
-                # would bloat the bucket for nothing)
-                src = F.when(is_del, F.lit(None)).otherwise(src)
-            return src.cast(f.dataType).alias(f.name)
-
-        aligned = applied.select(
-            *[_aligned_col(f) for f in schema.fields],
-            F.col(seq_col).cast("long").alias("_seq"),
-            is_del.alias("_tombstone"),
-        )
-        merged = survivors.unionByName(aligned).withColumn(
-            "_b", F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-        )
-
-        version = snap["version"] + 1
-        out_rel = os.path.join("data", f"c{version}")
-        out_dir = os.path.join(table.root, out_rel)
-        # bucket_aligned: the net side arrives clustered by bucket (the
-        # compaction's repartition) and survivors stream straight from
-        # bucket files through a broadcast-probe join, so the write needs
-        # NO exchange — the existing table is never shuffled, at any
-        # number of dirty buckets.  Unaligned callers (raw merge_into on
-        # arbitrary nets) pay one clustering shuffle to avoid a file per
-        # (task, bucket).
-        writer = (
-            merged if bucket_aligned else merged.repartition(max(1, len(dirty)), "_b")
-        )
-        tw = time.monotonic()
-        writer.write.mode("overwrite").partitionBy("_b").parquet(out_dir)
-        write_ms = int((time.monotonic() - tw) * 1000)
-        try:
-            metrics = obs.get
-        except Exception:
-            # a write whose plan is empty (e.g. a delete-only batch that
-            # removes a bucket's last rows) can elide the observe node —
-            # recompute the three counters directly over the persisted net
-            row = applied.agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum((F.col(op_col) != "D").cast("long")).alias("n_upserts"),
-                F.sum((F.col(op_col) == "D").cast("long")).alias("n_deletes"),
-            ).collect()[0]
-            metrics = row.asDict()
-        n_net = int(metrics["n_events"] or 0)
-
-        # -- 4. per-bucket offsets from parquet footers (metadata only) --- #
-        tf = time.monotonic()
-        new_files: dict[int, list[str]] = {}
-        partitions: list[dict] = []
-        for b in dirty:
-            bucket_dir = os.path.join(out_dir, f"_b={b}")
-            paths = sorted(glob.glob(os.path.join(bucket_dir, "*.parquet")))
-            new_files[b] = [os.path.relpath(p, table.root) for p in paths]
-            n_rows, max_seq = 0, -1
-            for p in paths:
-                nr, mx = _footer_stats(p)
-                n_rows += nr
-                max_seq = max(max_seq, mx)
-            partitions.append({"bucket": b, "n_rows": n_rows, "max_seq": max_seq})
-        footer_ms = int((time.monotonic() - tf) * 1000)
-
-        files = {int(b): fl for b, fl in snap["files"].items()}
-        for b in dirty:
-            fl = new_files.get(b, [])
-            if fl:
-                files[b] = fl
-            else:
-                files.pop(b, None)  # bucket fully deleted
-        watermarks = {int(b): int(w) for b, w in snap["watermarks"].items()}
-        # file-footer max covers surviving rows; a delete can remove a
-        # bucket's max row, so each bucket's fence also advances by that
-        # bucket's own incoming max (per-bucket, so per-bucket-monotone
-        # sources are never wrongly fenced by another bucket's seqs)
-        for p in partitions:
-            b = p["bucket"]
-            watermarks[b] = max(
-                watermarks.get(b, -1), p["max_seq"], bucket_max_seq.get(b, -1)
-            )
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        snap["version"] = version
-        snap["files"] = {str(b): fl for b, fl in sorted(files.items())}
-        snap["watermarks"] = {str(b): w for b, w in sorted(watermarks.items())}
-        snap["epochs"][stream_id] = epoch_id
-        lineage_entry = {
-            "kind": "merge",
-            "stream_id": stream_id,
-            "epoch_id": epoch_id,
-            "version": version,
-            "wall_ms": wall_ms,
-            "n_events": n_net,
-            "n_upserts": int(metrics["n_upserts"] or 0),
-            "n_deletes": int(metrics["n_deletes"] or 0),
-            "partitions": partitions,
-            **(extra_lineage or {}),
-        }
-        # finer stage delays (PerformanceUtils analog): the write job is
-        # the parallel part; footer stats + the snapshot commit are the
-        # DRIVER-SERIAL tail that bounds strong scaling at small epochs.
-        # (The commit itself can't time itself into the entry it writes —
-        # profilers take it as wall − materialize − evolve − write − footer.)
-        ph = dict(lineage_entry.get("phase_ms") or {})
-        ph.update(write_ms=write_ms, footer_ms=footer_ms)
-        lineage_entry["phase_ms"] = ph
-        snap["lineage"].append(lineage_entry)
-        table._write_snapshot(snap)
-        return MergeResult(
-            applied=True,
-            epoch_id=epoch_id,
-            version=version,
-            n_net=n_net,
-            n_dirty_buckets=len(dirty),
-            wall_ms=wall_ms,
-            partitions=partitions,
-        )
-    finally:
-        if own_persist:
-            net.unpersist()
+    return _merge(
+        spark, table, net, mor=False, epoch_id=epoch_id, stream_id=stream_id,
+        seq_col=seq_col, op_col=op_col, enforce_watermark=enforce_watermark,
+        dirty=dirty, bucket_max_seq=bucket_max_seq,
+        assume_persisted=assume_persisted, bucket_aligned=bucket_aligned,
+        extra_lineage=extra_lineage,
+    )
 
 
 def merge_into_mor(
@@ -401,135 +226,269 @@ def merge_into_mor(
     ``_seq`` (stale retransmitted deltas lose the read-time max_by; a
     replayed epoch is skipped outright).
     """
+    return _merge(
+        spark, table, net, mor=True, epoch_id=epoch_id, stream_id=stream_id,
+        seq_col=seq_col, op_col=op_col, enforce_watermark=False,
+        dirty=dirty, bucket_max_seq=bucket_max_seq,
+        assume_persisted=assume_persisted, bucket_aligned=bucket_aligned,
+        extra_lineage=extra_lineage,
+    )
+
+
+def _merge(
+    spark: SparkSession,
+    table: LakeTable,
+    net: DataFrame,
+    *,
+    mor: bool,
+    epoch_id: int,
+    stream_id: str,
+    seq_col: str,
+    op_col: str,
+    enforce_watermark: bool,
+    dirty: list[int] | None,
+    bucket_max_seq: dict[int, int] | None,
+    assume_persisted: bool,
+    bucket_aligned: bool,
+    extra_lineage: dict | None,
+) -> MergeResult:
+    """The body both merge modes share; they differ only in the rows they
+    stage (:func:`_cow_rows` / :func:`_mor_rows`) and in the file map the
+    staged files land in (``files`` replaced / ``deltas`` appended)."""
     t0 = time.monotonic()
-    snap = table.snapshot()
-    key = snap["key_col"]
-    num_buckets = snap["num_buckets"]
-
-    if epoch_id <= int(snap["epochs"].get(stream_id, -1)):
-        return MergeResult(
-            applied=False, epoch_id=epoch_id, skipped_reason="epoch-already-applied"
-        )
-
-    if "_bucket" not in net.columns:
-        net = net.withColumn(
-            "_bucket", F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-        )
-    own_persist = not assume_persisted
-    if own_persist:
-        net = net.persist()
-    try:
-        if dirty is None or bucket_max_seq is None:
-            rows = (
-                net.groupBy("_bucket").agg(F.max(F.col(seq_col)).alias("_mx")).collect()
+    with table._commit() as snap:
+        # -- 1. epoch idempotence guard --------------------------------- #
+        if epoch_id <= int(snap["epochs"].get(stream_id, -1)):
+            return MergeResult(
+                applied=False, epoch_id=epoch_id, skipped_reason="epoch-already-applied"
             )
-            if dirty is None:
-                dirty = sorted(int(r["_bucket"]) for r in rows)
-            else:
-                dirty = sorted(int(b) for b in dirty)
-            bucket_max_seq = {
-                int(r["_bucket"]): int(r["_mx"]) for r in rows if r["_mx"] is not None
-            }
-        else:
-            dirty = sorted(int(b) for b in dirty)
-        schema = T.StructType.fromJson(snap["schema"])
+        key, num_buckets = snap["key_col"], snap["num_buckets"]
+        if "_bucket" not in net.columns:
+            net = net.withColumn("_bucket", _bucket_expr(key, num_buckets))
 
-        obs = Observation(f"mor-{stream_id}-{epoch_id}")
-        staged = net.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum((F.col(op_col) != "D").cast("long")).alias("n_upserts"),
-            F.sum((F.col(op_col) == "D").cast("long")).alias("n_deletes"),
-        )
-        aligned = staged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in staged.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ],
-            F.col(seq_col).cast("long").alias("_seq"),
-            F.when(F.col(op_col) == "D", "D").otherwise("U").alias("_op"),
-            F.col("_bucket").alias("_b"),
-        )
-
-        version = snap["version"] + 1
-        out_rel = os.path.join("data", f"d{version}")
-        out_dir = os.path.join(table.root, out_rel)
-        writer = (
-            aligned if bucket_aligned else aligned.repartition(max(1, len(dirty)), "_b")
-        )
-        tw = time.monotonic()
-        writer.write.mode("overwrite").partitionBy("_b").parquet(out_dir)
-        write_ms = int((time.monotonic() - tw) * 1000)
-        metrics = obs.get
-
-        tf = time.monotonic()
-        partitions: list[dict] = []
-        deltas = {int(b): list(fl) for b, fl in snap.get("deltas", {}).items()}
-        for b in dirty:
-            bucket_dir = os.path.join(out_dir, f"_b={b}")
-            paths = sorted(glob.glob(os.path.join(bucket_dir, "*.parquet")))
-            if not paths:
-                continue
-            rel = [os.path.relpath(p, table.root) for p in paths]
-            deltas.setdefault(b, []).extend(rel)
-            n_rows, max_seq = 0, -1
-            for p in paths:
-                nr, mx = _footer_stats(p)
-                n_rows += nr
-                max_seq = max(max_seq, mx)
-            partitions.append({"bucket": b, "n_rows": n_rows, "max_seq": max_seq})
-
-        footer_ms = int((time.monotonic() - tf) * 1000)
-        watermarks = {int(b): int(w) for b, w in snap["watermarks"].items()}
-        # deltas carry tombstone rows too, so the footer max is already each
-        # bucket's true applied max; the per-bucket incoming max covers
-        # footers without stats.  Per-bucket (not epoch-global) so a
-        # per-bucket-monotone source is never wrongly fenced.
-        for p in partitions:
-            b = p["bucket"]
-            watermarks[b] = max(
-                watermarks.get(b, -1), p["max_seq"], bucket_max_seq.get(b, -1)
+        # -- 2. optional retransmit fence (bucket-monotone sources only) - #
+        if enforce_watermark and snap["watermarks"]:
+            wm = table.watermarks_df(spark)
+            net = (
+                net.join(F.broadcast(wm), "_bucket", "left")
+                .filter(F.col(seq_col) > F.coalesce(F.col("_wm"), F.lit(-1)))
+                .drop("_wm")
             )
+            dirty = bucket_max_seq = None  # fence may empty buckets; recompute
 
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        snap["version"] = version
-        snap["deltas"] = {str(b): fl for b, fl in sorted(deltas.items())}
-        snap["watermarks"] = {str(b): w for b, w in sorted(watermarks.items())}
-        snap["epochs"][stream_id] = epoch_id
-        lineage_entry = {
-            "kind": "merge",
-            "mode": "mor",
-            "stream_id": stream_id,
-            "epoch_id": epoch_id,
-            "version": version,
-            "wall_ms": wall_ms,
-            "n_events": int(metrics["n_events"] or 0),
-            "n_upserts": int(metrics["n_upserts"] or 0),
-            "n_deletes": int(metrics["n_deletes"] or 0),
-            "partitions": partitions,
-            **(extra_lineage or {}),
-        }
-        # same finer stage delays as the COW path (write job parallel;
-        # footer walk + snapshot commit are the driver-serial tail)
-        ph = dict(lineage_entry.get("phase_ms") or {})
-        ph.update(write_ms=write_ms, footer_ms=footer_ms)
-        lineage_entry["phase_ms"] = ph
-        snap["lineage"].append(lineage_entry)
-        table._write_snapshot(snap)
-        return MergeResult(
-            applied=True,
-            epoch_id=epoch_id,
-            version=version,
-            n_net=int(metrics["n_events"] or 0),
-            n_dirty_buckets=len(dirty),
-            wall_ms=wall_ms,
-            partitions=partitions,
-        )
-    finally:
+        own_persist = not assume_persisted
         if own_persist:
-            net.unpersist()
+            net = net.persist()
+        try:
+            # job A: which buckets does this epoch touch, and each bucket's
+            # own incoming max seq? (skipped when the caller already knows
+            # from its metadata job)
+            if dirty is None or bucket_max_seq is None:
+                rows = (
+                    net.groupBy("_bucket")
+                    .agg(F.max(F.col(seq_col)).alias("_mx"))
+                    .collect()
+                )
+                if dirty is None:
+                    dirty = [r["_bucket"] for r in rows]
+                bucket_max_seq = {
+                    int(r["_bucket"]): int(r["_mx"])
+                    for r in rows
+                    if r["_mx"] is not None
+                }
+            dirty = sorted(int(b) for b in dirty)
+            version = snap["version"] + 1
+            snap["epochs"][stream_id] = epoch_id
+            entry = {
+                "kind": "merge",
+                **({"mode": "mor"} if mor else {}),
+                "stream_id": stream_id,
+                "epoch_id": epoch_id,
+                "version": version,
+            }
+            if not dirty:
+                # nothing to apply: still commit the epoch marker so a
+                # replay of this epoch stays a no-op.
+                snap["lineage"].append(
+                    {
+                        **entry,
+                        "wall_ms": int((time.monotonic() - t0) * 1000),
+                        "n_events": 0,
+                        "n_upserts": 0,
+                        "n_deletes": 0,
+                        "partitions": [],
+                        **(extra_lineage or {}),
+                    }
+                )
+                return MergeResult(
+                    applied=True,
+                    epoch_id=epoch_id,
+                    version=version,
+                    skipped_reason="empty-batch",
+                )
+
+            # -- 3. one job writes the dirty buckets' rows; the epoch's op
+            #    counts ride on an Observation of the applied branch ------ #
+            obs = Observation(f"{'mor' if mor else 'merge'}-{stream_id}-{epoch_id}")
+            if mor:
+                applied, rows = _mor_rows(net, snap, seq_col, op_col, obs)
+            else:
+                applied, rows = _cow_rows(
+                    spark, table, net, snap, dirty, seq_col, op_col, obs
+                )
+            # bucket_aligned: the net side arrives clustered by bucket (the
+            # compaction's repartition) and COW survivors stream straight
+            # from bucket files through a broadcast-probe join, so the
+            # write needs NO exchange — the existing table is never
+            # shuffled, at any number of dirty buckets.  Unaligned callers
+            # (raw merges of arbitrary nets) pay one clustering shuffle to
+            # avoid a file per (task, bucket).
+            if not bucket_aligned:
+                rows = rows.repartition(max(1, len(dirty)), "_b")
+            staged, phase_ms = _stage(
+                table, rows, "d" if mor else "c", version, dirty
+            )
+            try:
+                counts = obs.get
+            except Exception:
+                # a write whose plan is empty (e.g. a delete-only batch
+                # that removes a bucket's last rows) can elide the observe
+                # node — recompute the counters over the persisted net
+                counts = applied.agg(*_op_counts(op_col)).collect()[0].asDict()
+            counts = {
+                k: int(counts[k] or 0) for k in ("n_events", "n_upserts", "n_deletes")
+            }
+
+            # -- 4. file map, offsets and fences from the staged footers -- #
+            fmap = "deltas" if mor else "files"
+            prior = snap.get(fmap, {}) if mor else {}
+            _put_files(
+                snap, fmap, {b: prior.get(str(b), []) + staged[b][0] for b in dirty}
+            )
+            partitions = []
+            watermarks = {int(b): int(w) for b, w in snap["watermarks"].items()}
+            for b in dirty:
+                _, n_rows, max_seq = staged[b]
+                partitions.append({"bucket": b, "n_rows": n_rows, "max_seq": max_seq})
+                # the footer max covers the rows written; a COW delete can
+                # remove a bucket's max row, so each bucket's fence also
+                # advances by its own incoming max (per-bucket, so
+                # per-bucket-monotone sources are never wrongly fenced by
+                # another bucket's seqs)
+                watermarks[b] = max(
+                    watermarks.get(b, -1), max_seq, bucket_max_seq.get(b, -1)
+                )
+            snap["watermarks"] = {str(b): w for b, w in sorted(watermarks.items())}
+
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            # finer stage delays (PerformanceUtils analog): the write job is
+            # the parallel part; footer stats + the snapshot commit are the
+            # DRIVER-SERIAL tail that bounds strong scaling at small epochs.
+            # (The commit can't time itself into the entry it writes —
+            # profilers take it as wall − materialize − evolve − write −
+            # footer.)
+            extra = extra_lineage or {}
+            snap["lineage"].append(
+                {
+                    **entry,
+                    "wall_ms": wall_ms,
+                    **counts,
+                    "partitions": partitions,
+                    **extra,
+                    "phase_ms": {**(extra.get("phase_ms") or {}), **phase_ms},
+                }
+            )
+            return MergeResult(
+                applied=True,
+                epoch_id=epoch_id,
+                version=version,
+                n_net=counts["n_events"],
+                n_dirty_buckets=len(dirty),
+                wall_ms=wall_ms,
+                partitions=partitions,
+            )
+        finally:
+            if own_persist:
+                net.unpersist()
+
+
+def _cow_rows(spark, table, net, snap, dirty, seq_col, op_col, obs):
+    """Copy-on-write: every dirty bucket rewritten whole — its stored rows
+    that win LWW plus the incoming winners.  Returns ``(applied, rows)``,
+    ``applied`` being the observed incoming winners.
+
+    Tombstones ride along: ``current`` includes prior delete tombstones
+    (they fence stale upserts exactly like live rows — without them a
+    delete leaves NOTHING to out-sequence an older upsert delivered later,
+    e.g. when two source files with colliding mtimes list in either order
+    after a resume, and the doc silently resurrects), and an applied
+    delete is WRITTEN as a ``_tombstone=true`` row instead of vanishing.
+    User-facing reads filter them; :func:`purge_tombstones` reclaims them
+    once the source can no longer deliver older seqs."""
+    key = snap["key_col"]
+    schema = T.StructType.fromJson(snap["schema"])
+    current = table.read(spark, buckets=dirty, with_seq=True, with_tombstones=True)
+    cur_seq = F.coalesce(F.col("_seq"), F.lit(-1))
+    net_small = net.select(key, F.col(seq_col).alias("_in_seq"))
+
+    # existing rows that survive: no incoming row, or incoming is
+    # stale/equal (LWW keeps the newer version)
+    survivors = (
+        current.join(net_small, key, "left")
+        .filter(F.col("_in_seq").isNull() | (F.col("_in_seq") <= cur_seq))
+        .drop("_in_seq")
+    )
+    # incoming winners beaten by the existing row
+    stale_keys = (
+        current.select(key, "_seq")
+        .join(net_small, key, "inner")
+        .filter(cur_seq >= F.col("_in_seq"))
+        .select(key)
+    )
+    applied = net.join(stale_keys, key, "left_anti").observe(obs, *_op_counts(op_col))
+    is_del = F.col(op_col) == "D"
+
+    def _aligned_col(f):
+        src = F.col(f.name) if f.name in applied.columns else F.lit(None)
+        if f.name != key:
+            # data columns: NULL on tombstones (the key + _seq are the
+            # whole fence; carrying a deleted doc's payload would bloat
+            # the bucket for nothing)
+            src = F.when(is_del, F.lit(None)).otherwise(src)
+        return src.cast(f.dataType).alias(f.name)
+
+    aligned = applied.select(
+        *[_aligned_col(f) for f in schema.fields],
+        F.col(seq_col).cast("long").alias("_seq"),
+        is_del.alias("_tombstone"),
+    )
+    rows = survivors.unionByName(aligned).withColumn(
+        "_b", _bucket_expr(key, snap["num_buckets"])
+    )
+    return applied, rows
+
+
+def _mor_rows(net, snap, seq_col, op_col, obs):
+    """Merge-on-read: the incoming winners alone, deletes as ``_op='D'``
+    delta rows.  Returns ``(applied, rows)`` like :func:`_cow_rows`."""
+    applied = net.observe(obs, *_op_counts(op_col))
+    rows = applied.select(
+        *_aligned(applied, T.StructType.fromJson(snap["schema"])),
+        F.col(seq_col).cast("long").alias("_seq"),
+        F.when(F.col(op_col) == "D", "D").otherwise("U").alias("_op"),
+        F.col("_bucket").alias("_b"),
+    )
+    return applied, rows
+
+
+def _aligned(df: DataFrame, schema: T.StructType) -> list:
+    """``df``'s columns cast to the table schema, NULL where ``df`` lacks one."""
+    return [
+        (F.col(f.name) if f.name in df.columns else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in schema.fields
+    ]
 
 
 def compact_buckets(
@@ -555,65 +514,32 @@ def compact_buckets(
     :func:`purge_tombstones` (already-compacted buckets no longer carry
     dead tombstones and are skipped by its discovery scan).
     """
-    snap = table.snapshot()
-    todo = sorted(
-        int(b) for b, fl in snap.get("deltas", {}).items() if len(fl) >= min_deltas
-    )
-    if not todo:
-        return {"compacted_buckets": 0, "version": snap["version"]}
-    # delete winners fold into the base AS TOMBSTONES — dropping them
-    # here would let a stale upsert from a reordered/replayed batch
-    # resurrect the doc right after compaction (reads filter them;
-    # the explicit horizon below / purge_tombstones reclaims them)
-    resolved = table.read(
-        spark, buckets=todo, with_seq=True, with_tombstones=True
-    ).withColumn(
-        "_b",
-        F.pmod(F.hash(F.col(snap["key_col"])), F.lit(snap["num_buckets"])).cast("int"),
-    )
-    if tombstone_horizon is not None:
-        resolved = resolved.filter(
-            ~(F.col("_tombstone") & (F.col("_seq") <= int(tombstone_horizon)))
+    with table._commit() as snap:
+        todo = sorted(
+            int(b) for b, fl in snap.get("deltas", {}).items() if len(fl) >= min_deltas
         )
-    version = snap["version"] + 1
-    out_rel = os.path.join("data", f"c{version}")
-    out_dir = os.path.join(table.root, out_rel)
-    resolved.repartition(max(1, len(todo)), "_b").write.mode("overwrite").partitionBy(
-        "_b"
-    ).parquet(out_dir)
-
-    files = {int(b): fl for b, fl in snap["files"].items()}
-    deltas = {int(b): fl for b, fl in snap.get("deltas", {}).items()}
-    for b, rel in _written_bucket_files(table, out_dir, todo).items():
-        if rel:
-            files[b] = rel
-        else:
-            files.pop(b, None)  # bucket fully deleted by tombstones
-        deltas.pop(b, None)
-    snap["version"] = version
-    snap["files"] = {str(b): fl for b, fl in sorted(files.items())}
-    snap["deltas"] = {str(b): fl for b, fl in sorted(deltas.items())}
-    snap["lineage"].append(
-        {"kind": "compact", "version": version, "buckets": todo}
-    )
-    table._write_snapshot(snap)
+        if not todo:
+            return {"compacted_buckets": 0, "version": snap["version"]}
+        version = snap["version"] + 1
+        # delete winners fold into the base AS TOMBSTONES — dropping them
+        # here would let a stale upsert from a reordered/replayed batch
+        # resurrect the doc right after compaction (reads filter them;
+        # the explicit horizon below / purge_tombstones reclaims them)
+        resolved = table.read(
+            spark, buckets=todo, with_seq=True, with_tombstones=True
+        ).withColumn("_b", _bucket_expr(snap["key_col"], snap["num_buckets"]))
+        if tombstone_horizon is not None:
+            resolved = resolved.filter(
+                ~(F.col("_tombstone") & (F.col("_seq") <= int(tombstone_horizon)))
+            )
+        staged, _ = _stage(
+            table, resolved.repartition(max(1, len(todo)), "_b"), "c", version, todo
+        )
+        # a bucket the horizon left empty drops out of the base
+        _put_files(snap, "files", {b: staged[b][0] for b in todo})
+        _put_files(snap, "deltas", dict.fromkeys(todo, []))
+        snap["lineage"].append({"kind": "compact", "version": version, "buckets": todo})
     return {"compacted_buckets": len(todo), "version": version}
-
-
-def _written_bucket_files(
-    table: LakeTable, out_dir: str, buckets: list[int]
-) -> dict[int, list[str]]:
-    """Post-write manifest collection shared by the bucket-rewrite
-    maintenance ops (compact/rebucket/purge; merge_into and
-    bootstrap_snapshot keep their own loops fused with footer-stat
-    collection): the root-relative parquet paths under
-    ``out_dir/_b=<b>`` for each bucket, empty list when the rewrite
-    left the bucket with no rows."""
-    out: dict[int, list[str]] = {}
-    for b in buckets:
-        paths = sorted(glob.glob(os.path.join(out_dir, f"_b={b}", "*.parquet")))
-        out[int(b)] = [os.path.relpath(p, table.root) for p in paths]
-    return out
 
 
 def purge_tombstones(
@@ -643,61 +569,49 @@ def purge_tombstones(
     Scale: one filter scan to find affected buckets, then a
     manifest-pruned rewrite of only those buckets.
     """
-    snap = table.snapshot()
-    key = snap["key_col"]
-    num_buckets = int(snap["num_buckets"])
-    outstanding = sorted(
-        int(b) for b, fl in (snap.get("deltas") or {}).items() if fl
-    )
-    if outstanding:
-        raise ValueError(
-            f"purge_tombstones: buckets {outstanding} have unfolded delta "
-            f"files — run compact_buckets first (a purge only reclaims "
-            f"BASE rows; delta tombstones would re-resolve on the next "
-            f"read while this call reported success)"
+    with table._commit() as snap:
+        outstanding = sorted(
+            int(b) for b, fl in (snap.get("deltas") or {}).items() if fl
         )
-    bexpr = F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-    dead = F.col("_tombstone") & (F.col("_seq") <= int(horizon_seq))
-    todo = sorted(
-        r["_b"]
-        for r in table.read(spark, with_seq=True, with_tombstones=True)
-        .filter(dead)
-        .select(bexpr.alias("_b"))
-        .distinct()
-        .collect()
-    )
-    if not todo:
-        return {"purged_buckets": 0, "version": int(snap["version"])}
-    version = int(snap["version"]) + 1
-    out_dir = os.path.join(table.root, "data", f"c{version}")
-    (
+        if outstanding:
+            raise ValueError(
+                f"purge_tombstones: buckets {outstanding} have unfolded delta "
+                f"files — run compact_buckets first (a purge only reclaims "
+                f"BASE rows; delta tombstones would re-resolve on the next "
+                f"read while this call reported success)"
+            )
+        bexpr = _bucket_expr(snap["key_col"], int(snap["num_buckets"]))
+        dead = F.col("_tombstone") & (F.col("_seq") <= int(horizon_seq))
+        todo = sorted(
+            r["_b"]
+            for r in table.read(spark, with_seq=True, with_tombstones=True)
+            .filter(dead)
+            .select(bexpr.alias("_b"))
+            .distinct()
+            .collect()
+        )
+        if not todo:
+            return {"purged_buckets": 0, "version": int(snap["version"])}
+        version = int(snap["version"]) + 1
         # manifest-pruned: only the affected buckets' files are scanned
         # for the rewrite (the discovery scan above is the one full pass)
-        table.read(spark, buckets=todo, with_seq=True, with_tombstones=True)
-        .filter(~dead)
-        .withColumn("_b", bexpr)
-        .repartition(max(1, len(todo)), "_b")
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(out_dir)
-    )
-    files = {int(b): fl for b, fl in snap["files"].items()}
-    for b, rel in _written_bucket_files(table, out_dir, todo).items():
-        if rel:
-            files[b] = rel
-        else:
-            files.pop(b, None)  # bucket held only purged tombstones
-    snap["version"] = version
-    snap["files"] = {str(b): fl for b, fl in sorted(files.items())}
-    snap["lineage"].append(
-        {
-            "kind": "purge_tombstones",
-            "version": version,
-            "buckets": [int(b) for b in todo],
-            "horizon_seq": int(horizon_seq),
-        }
-    )
-    table._write_snapshot(snap)
+        kept = (
+            table.read(spark, buckets=todo, with_seq=True, with_tombstones=True)
+            .filter(~dead)
+            .withColumn("_b", bexpr)
+            .repartition(max(1, len(todo)), "_b")
+        )
+        staged, _ = _stage(table, kept, "c", version, todo)
+        # a bucket that held only purged tombstones drops out
+        _put_files(snap, "files", {b: staged[b][0] for b in todo})
+        snap["lineage"].append(
+            {
+                "kind": "purge_tombstones",
+                "version": version,
+                "buckets": todo,
+                "horizon_seq": int(horizon_seq),
+            }
+        )
     return {"purged_buckets": len(todo), "version": version}
 
 
@@ -725,62 +639,40 @@ def rebucket(
     carrying a too-high fence would silently drop fresh events.  Epoch
     guards (exactly-once) are unaffected.
     """
-    snap = table.snapshot()
-    old_b = int(snap["num_buckets"])
-    if int(new_num_buckets) == old_b:
-        return {"rebucketed": False, "version": int(snap["version"])}
-    key = snap["key_col"]
-    version = int(snap["version"]) + 1
-    out_rel = os.path.join("data", f"c{version}")
-    out_dir = os.path.join(table.root, out_rel)
-    (
+    new_b = int(new_num_buckets)
+    with table._commit() as snap:
+        old_b = int(snap["num_buckets"])
+        if new_b == old_b:
+            return {"rebucketed": False, "version": int(snap["version"])}
+        version = int(snap["version"]) + 1
         # tombstones migrate to their new buckets with everything else —
         # the per-key fence must survive the layout change
-        table.read(spark, with_seq=True, with_tombstones=True)
-        .withColumn(
-            "_b", F.pmod(F.hash(F.col(key)), F.lit(int(new_num_buckets))).cast("int")
+        moved = (
+            table.read(spark, with_seq=True, with_tombstones=True)
+            .withColumn("_b", _bucket_expr(snap["key_col"], new_b))
+            .repartition(new_b, "_b")
         )
-        .repartition(int(new_num_buckets), "_b")
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(out_dir)
-    )
-    files = {
-        b: rel
-        for b, rel in _written_bucket_files(
-            table, out_dir, list(range(int(new_num_buckets)))
-        ).items()
-        if rel
-    }
-    old_wms = [int(w) for w in snap["watermarks"].values()]
-    floor_wm = min(old_wms) if old_wms else None
-    snap["version"] = version
-    snap["num_buckets"] = int(new_num_buckets)
-    snap["files"] = {str(b): fl for b, fl in sorted(files.items())}
-    snap["deltas"] = {}
-    # EVERY new bucket is fenced, including ones the rewrite left empty
-    # (a bucket can be empty because its only keys were deleted — a
-    # retransmitted prefix must still not resurrect them; same rule as
-    # bootstrap_snapshot)
-    snap["watermarks"] = (
-        {str(b): floor_wm for b in range(int(new_num_buckets))}
-        if floor_wm is not None
-        else {}
-    )
-    snap["lineage"].append(
-        {
-            "kind": "rebucket",
-            "version": version,
-            "from_buckets": old_b,
-            "to_buckets": int(new_num_buckets),
-        }
-    )
-    table._write_snapshot(snap)
-    return {
-        "rebucketed": True,
-        "version": version,
-        "num_buckets": int(new_num_buckets),
-    }
+        staged, _ = _stage(table, moved, "c", version, range(new_b))
+        old_wms = [int(w) for w in snap["watermarks"].values()]
+        snap["num_buckets"] = new_b
+        snap["files"], snap["deltas"] = {}, {}
+        _put_files(snap, "files", {b: fl for b, (fl, _, _) in staged.items()})
+        # EVERY new bucket is fenced, including ones the rewrite left empty
+        # (a bucket can be empty because its only keys were deleted — a
+        # retransmitted prefix must still not resurrect them; same rule as
+        # bootstrap_snapshot)
+        snap["watermarks"] = (
+            {str(b): min(old_wms) for b in range(new_b)} if old_wms else {}
+        )
+        snap["lineage"].append(
+            {
+                "kind": "rebucket",
+                "version": version,
+                "from_buckets": old_b,
+                "to_buckets": new_b,
+            }
+        )
+    return {"rebucketed": True, "version": version, "num_buckets": new_b}
 
 
 def bootstrap_snapshot(
@@ -820,20 +712,21 @@ def bootstrap_snapshot(
     out accordingly.  No collect, no per-row Python.
     """
     t0 = time.monotonic()
-    snap = table.snapshot()
-    if snap["files"] or snap.get("deltas") or snap["watermarks"]:
-        raise ValueError(
-            "bootstrap_snapshot requires an empty table — it seeds initial "
-            "state, it does not merge (use apply_batch/merge_into for that)"
-        )
-    key = snap["key_col"]
-    num_buckets = snap["num_buckets"]
+
+    def _require_empty(snap):
+        if snap["files"] or snap.get("deltas") or snap["watermarks"]:
+            raise ValueError(
+                "bootstrap_snapshot requires an empty table — it seeds initial "
+                "state, it does not merge (use apply_batch/merge_into for that)"
+            )
 
     # snapshot-authoritative additive evolution: columns the snapshot
     # carries beyond the create-time schema are added (the reference's
-    # add-column-only rule, TableMeta.duplicateAndAddColumn)
-    schema = T.StructType.fromJson(snap["schema"])
-    known = {f.name for f in schema.fields}
+    # add-column-only rule, TableMeta.duplicateAndAddColumn).  add_columns
+    # commits on its own, so it runs before this writer takes the lock.
+    snap = table.snapshot()
+    _require_empty(snap)
+    known = set(T.StructType.fromJson(snap["schema"]).fieldNames())
     extra = [
         (f.name, f.dataType.simpleString())
         for f in snapshot_df.schema.fields
@@ -841,67 +734,52 @@ def bootstrap_snapshot(
     ]
     if extra:
         table.add_columns(extra)
-        snap = table.snapshot()
-        schema = T.StructType.fromJson(snap["schema"])
 
-    seq_expr = (
-        F.col(seq_col).cast("long") if seq_col else F.lit(int(as_of_seq)).cast("long")
-    )
-    aligned = snapshot_df.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in snapshot_df.columns
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ],
-        seq_expr.alias("_seq"),
-    ).withColumn("_b", F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int"))
-
-    version = snap["version"] + 1
-    out_rel = os.path.join("data", f"c{version}")
-    out_dir = os.path.join(table.root, out_rel)
-    aligned.repartition(num_buckets, "_b").write.mode("overwrite").partitionBy(
-        "_b"
-    ).parquet(out_dir)
-
-    files: dict[int, list[str]] = {}
-    partitions: list[dict] = []
-    n_rows_total = 0
-    for bucket_dir in sorted(glob.glob(os.path.join(out_dir, "_b=*"))):
-        b = int(os.path.basename(bucket_dir).split("=", 1)[1])
-        paths = sorted(glob.glob(os.path.join(bucket_dir, "*.parquet")))
-        if not paths:
-            continue
-        files[b] = [os.path.relpath(p, table.root) for p in paths]
-        n_rows = sum(_footer_stats(p)[0] for p in paths)
-        n_rows_total += n_rows
-        partitions.append({"bucket": b, "n_rows": n_rows, "max_seq": int(as_of_seq)})
-
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    snap["version"] = version
-    snap["files"] = {str(b): fl for b, fl in sorted(files.items())}
-    # EVERY bucket is fenced at the snapshot position, including buckets
-    # the snapshot happened to leave empty — state below as_of_seq is
-    # fully represented, so replaying any event at or below it must no-op
-    snap["watermarks"] = {str(b): int(as_of_seq) for b in range(num_buckets)}
-    snap["lineage"].append(
-        {
-            "kind": "bootstrap",
-            "stream_id": stream_id,
-            "version": version,
-            "as_of_seq": int(as_of_seq),
-            "wall_ms": wall_ms,
-            "n_rows": n_rows_total,
-            "partitions": partitions,
-        }
-    )
-    table._write_snapshot(snap)
+    with table._commit() as snap:
+        _require_empty(snap)  # another writer may have filled it meanwhile
+        num_buckets = snap["num_buckets"]
+        seq_expr = F.col(seq_col) if seq_col else F.lit(int(as_of_seq))
+        aligned = snapshot_df.select(
+            *_aligned(snapshot_df, T.StructType.fromJson(snap["schema"])),
+            seq_expr.cast("long").alias("_seq"),
+        ).withColumn("_b", _bucket_expr(snap["key_col"], num_buckets))
+        version = snap["version"] + 1
+        staged, _ = _stage(
+            table,
+            aligned.repartition(num_buckets, "_b"),
+            "c",
+            version,
+            range(num_buckets),
+        )
+        _put_files(snap, "files", {b: fl for b, (fl, _, _) in staged.items()})
+        partitions = [
+            {"bucket": b, "n_rows": n_rows, "max_seq": int(as_of_seq)}
+            for b, (fl, n_rows, _) in staged.items()
+            if fl
+        ]
+        n_rows_total = sum(p["n_rows"] for p in partitions)
+        # EVERY bucket is fenced at the snapshot position, including buckets
+        # the snapshot happened to leave empty — state below as_of_seq is
+        # fully represented, so replaying any event at or below it must no-op
+        snap["watermarks"] = {str(b): int(as_of_seq) for b in range(num_buckets)}
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        snap["lineage"].append(
+            {
+                "kind": "bootstrap",
+                "stream_id": stream_id,
+                "version": version,
+                "as_of_seq": int(as_of_seq),
+                "wall_ms": wall_ms,
+                "n_rows": n_rows_total,
+                "partitions": partitions,
+            }
+        )
     return MergeResult(
         applied=True,
         epoch_id=-1,
         version=version,
         n_net=n_rows_total,
-        n_dirty_buckets=len(files),
+        n_dirty_buckets=len(partitions),
         wall_ms=wall_ms,
         partitions=partitions,
     )

@@ -4,8 +4,10 @@ The execution image ships no Iceberg/Delta jars, so the exactly-once
 copy-on-write sink the north rule demands is implemented from scratch on
 public primitives only.  The design mirrors Iceberg's metadata model:
 
-- **Data layout**: ``<root>/data/v<commit>/b=<bucket>/part-*.parquet``.
-  Rows are hash-bucketed on the merge key with Spark's built-in Murmur3
+- **Data layout**: ``<root>/data/c<version>/_b=<bucket>/part-*.parquet``
+  for base files and ``data/d<version>/_b=<bucket>/`` for merge-on-read
+  deltas, ``<version>`` being the snapshot that adds them.  Rows are
+  hash-bucketed on the merge key with Spark's built-in Murmur3
   ``hash()`` (the same family the reference uses for its queue fan-out:
   HashUtils.java:30-133, ``hash & 1023`` IKeyGenerator.java:22).
 - **Snapshots**: ``<root>/_meta/v<N>.json`` — immutable manifest listing,
@@ -18,10 +20,13 @@ public primitives only.  The design mirrors Iceberg's metadata model:
   concurrency, single winner), then ``CURRENT`` is flipped with
   ``os.replace`` (atomic on POSIX).  A crash between the two leaves
   ``CURRENT`` at the old version and an orphan snapshot — readers never see
-  a partial commit.  This replaces the reference's ZooKeeper ``/dynamic``
-  znode checkpoint (ZkLeaderSelector.refreshLogPos,
-  ZkLeaderSelector.java:184-220) with the watermark committed *in the same
-  transaction as the data*, which upgrades at-least-once to exactly-once.
+  a partial commit.  Writers serialize on a ``flock`` of ``_meta/LOCK``
+  held from snapshot read to publish (:meth:`LakeTable._commit`; the
+  reference's one-writer leader latch), so no two stage into one data
+  directory.  This replaces the reference's ZooKeeper ``/dynamic`` znode
+  checkpoint (ZkLeaderSelector.refreshLogPos, ZkLeaderSelector.java:184-220)
+  with the watermark committed *in the same transaction as the data*,
+  which upgrades at-least-once to exactly-once.
 - **Schema evolution**: additive only, like the reference
   (BinlogWorker.java:1079 — "only add-column is handled").  The snapshot
   schema is authoritative; older data files simply lack the new columns and
@@ -40,6 +45,8 @@ table — here they live in the manifest so commit atomicity is free.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
 import re
@@ -53,6 +60,7 @@ from pyspark.sql import types as T
 META_DIR = "_meta"
 DATA_DIR = "data"
 CURRENT = "CURRENT"
+LOCK = "LOCK"
 TAGS_DIR = "tags"
 LINEAGE_LOG = "lineage.jsonl"
 # lineage entries kept inside the snapshot itself; older entries roll to
@@ -67,18 +75,23 @@ def _bucket_expr(key_col: str, num_buckets: int):
     return F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets)).cast("int")
 
 
-def _atomic_write_json(path: str, obj) -> None:
-    """Last-writer-wins atomic JSON publish: write+fsync a temp file,
-    then ``os.replace`` — the pointer-update pattern shared by tags, feed
-    cursors, and rollup markers.  (Snapshot version files use the
-    stricter O_EXCL-link commit in ``_write_snapshot`` instead, because
-    there the FIRST writer must win.)"""
+def _fsynced_tmp(path: str, text: str) -> str:
+    """Write + fsync ``text`` to a fresh temp file beside ``path``."""
     tmp = f"{path}.tmp.{os.getpid()}.{time.monotonic_ns()}"
     with open(tmp, "w") as f:
-        json.dump(obj, f)
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
-    os.replace(tmp, path)
+    return tmp
+
+
+def _atomic_write_json(path: str, obj) -> None:
+    """Last-writer-wins atomic JSON publish: an fsynced temp file, then
+    ``os.replace`` — the pointer-update pattern shared by tags, feed
+    cursors, rollup markers and ``CURRENT``.  (Snapshot version files use
+    the stricter O_EXCL-link commit in ``_write_snapshot`` instead,
+    because there the FIRST writer must win.)"""
+    os.replace(_fsynced_tmp(path, json.dumps(obj)), path)
 
 
 class CommitConflict(RuntimeError):
@@ -185,23 +198,32 @@ class LakeTable:
             snap["lineage"] = snap["lineage"][-LINEAGE_KEEP:]
         version = snap["version"]
         final = os.path.join(self.meta_dir, f"v{version}.json")
-        tmp = final + f".tmp.{os.getpid()}.{time.monotonic_ns()}"
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
+        tmp = _fsynced_tmp(final, json.dumps(snap))
         try:
             os.link(tmp, final)  # fails if version already published
         except FileExistsError as e:
             raise CommitConflict(f"version {version} already committed") from e
         finally:
             os.unlink(tmp)
-        cur_tmp = os.path.join(self.meta_dir, f".CURRENT.tmp.{os.getpid()}")
-        with open(cur_tmp, "w") as f:
-            f.write(str(version))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(cur_tmp, os.path.join(self.meta_dir, CURRENT))
+        _atomic_write_json(os.path.join(self.meta_dir, CURRENT), version)
+
+    @contextlib.contextmanager
+    def _commit(self):
+        """The one read-modify-write path of the snapshot: take the writer
+        lock, yield the current snapshot for mutation, and on a clean exit
+        publish it as the next version.  A body that leaves the snapshot
+        as it found it, or raises, publishes nothing.  Writers stage data
+        inside the block, so ``data/<kind><next version>`` is theirs
+        alone.  The ``flock`` is not reentrant: a writer called inside
+        another writer's block waits on itself forever."""
+        with open(os.path.join(self.meta_dir, LOCK), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+            snap = self.snapshot()
+            version, before = snap["version"], json.dumps(snap)
+            yield snap
+            if json.dumps(snap) != before:
+                snap["version"] = version + 1
+                self._write_snapshot(snap)
 
     # ------------------------------------------------------------------ #
     # schema
@@ -218,27 +240,19 @@ class LakeTable:
         reader fills NULLs — exactly Iceberg's lazy evolution.
         Returns True if the schema changed.
         """
-        snap = self.snapshot()
-        schema = T.StructType.fromJson(snap["schema"])
-        existing = {f.name for f in schema.fields}
-        changed = False
-        for name, ddl in cols:
-            if name in existing:
-                continue
-            schema = schema.add(T.StructField(name, _parse_type(ddl), True))
-            changed = True
-        if changed:
-            snap["schema"] = schema.jsonValue()
-            snap["version"] += 1
-            snap["lineage"].append(
-                {
-                    "kind": "alter",
-                    "version": snap["version"],
-                    "added": [c for c, _ in cols if c not in existing],
-                }
-            )
-            self._write_snapshot(snap)
-        return changed
+        with self._commit() as snap:
+            schema = T.StructType.fromJson(snap["schema"])
+            added = []
+            for name, ddl in cols:
+                if name not in schema.fieldNames():
+                    schema = schema.add(T.StructField(name, _parse_type(ddl), True))
+                    added.append(name)
+            if added:
+                snap["schema"] = schema.jsonValue()
+                snap["lineage"].append(
+                    {"kind": "alter", "version": snap["version"] + 1, "added": added}
+                )
+        return bool(added)
 
     # ------------------------------------------------------------------ #
     # read path
@@ -308,6 +322,11 @@ class LakeTable:
 
         ts = F.coalesce(F.col("_tombstone"), F.lit(False))
 
+        def _scan(paths: list[str], schema: T.StructType) -> DataFrame:
+            if paths:
+                return spark.read.schema(schema).parquet(*paths)
+            return spark.createDataFrame([], schema)
+
         def _finish(df: DataFrame) -> DataFrame:
             if with_tombstones:
                 df = df.withColumn("_tombstone", ts)
@@ -315,25 +334,19 @@ class LakeTable:
                 df = df.filter(~ts).drop("_tombstone")
             return df if with_seq else df.drop("_seq")
 
-        clean = (
-            spark.read.schema(read_schema).parquet(*base_clean)
-            if base_clean
-            else spark.createDataFrame([], read_schema)
-        )
+        clean = _scan(base_clean, read_schema)
         if not delta_files:
             return _finish(clean)
 
         mor_schema = read_schema.add(T.StructField("_op", T.StringType(), True))
-        deltas = spark.read.schema(mor_schema).parquet(*delta_files)
+        deltas = _scan(delta_files, mor_schema)
         # base rows participate in read-time LWW under their STORED
         # liveness — a base tombstone (written by a tombstone-retaining
         # compaction) must keep out-sequencing stale upserts, not flip
         # back to a live row
-        dirty_base = (
-            spark.read.schema(read_schema).parquet(*base_dirty)
-            if base_dirty
-            else spark.createDataFrame([], read_schema)
-        ).withColumn("_op", F.when(ts, F.lit("D")).otherwise(F.lit("U")))
+        dirty_base = _scan(base_dirty, read_schema).withColumn(
+            "_op", F.when(ts, F.lit("D")).otherwise(F.lit("U"))
+        )
         packed = F.struct(
             *[F.col(f.name) for f in mor_schema.fields if f.name != key]
         ).alias("_p")
@@ -538,14 +551,11 @@ class LakeTable:
         return j.select(*out_cols)
 
     # ------------------------------------------------------------------ #
-    # commit bookkeeping accessors
+    # commit bookkeeping and control plane — administrative overrides
     # ------------------------------------------------------------------ #
     def last_epoch(self, stream_id: str) -> int:
         return int(self.snapshot()["epochs"].get(stream_id, -1))
 
-    # ------------------------------------------------------------------ #
-    # control plane — administrative position/fence overrides
-    # ------------------------------------------------------------------ #
     def set_stream_epoch(self, stream_id: str, epoch_id: int) -> int:
         """Administratively set a stream's applied-epoch marker — the
         rebuild of the tower's set-binlog-position API
@@ -557,21 +567,19 @@ class LakeTable:
         makes every replayed change a no-op or a legitimate newer write.
         Committed as a versioned ``admin`` lineage entry — auditable and
         atomic like every other commit."""
-        snap = self.snapshot()
-        prev = int(snap["epochs"].get(stream_id, -1))
-        snap["epochs"][stream_id] = int(epoch_id)
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "kind": "admin",
-                "op": "set_stream_epoch",
-                "stream_id": stream_id,
-                "from": prev,
-                "to": int(epoch_id),
-                "version": snap["version"],
-            }
-        )
-        self._write_snapshot(snap)
+        with self._commit() as snap:
+            prev = int(snap["epochs"].get(stream_id, -1))
+            snap["epochs"][stream_id] = int(epoch_id)
+            snap["lineage"].append(
+                {
+                    "kind": "admin",
+                    "op": "set_stream_epoch",
+                    "stream_id": stream_id,
+                    "from": prev,
+                    "to": int(epoch_id),
+                    "version": snap["version"] + 1,
+                }
+            )
         return prev
 
     def rollback(self, version: int | str) -> int:
@@ -590,21 +598,21 @@ class LakeTable:
         protects against any stragglers), and ``read_changes`` across
         the rollback commit emits the net UNDO diff for downstream feed
         consumers.  Returns the new version number."""
-        target = self.snapshot(version)
-        cur = self.snapshot()
-        new = dict(target)
-        new["version"] = int(cur["version"]) + 1
-        new["lineage"] = list(cur.get("lineage", [])) + [
-            {
-                "kind": "admin",
-                "op": "rollback",
-                "to_version": int(target["version"]),
-                "from_version": int(cur["version"]),
-                "version": new["version"],
-            }
-        ]
-        self._write_snapshot(new)
-        return int(new["version"])
+        with self._commit() as snap:
+            target = self.snapshot(version)
+            cur_version, lineage = int(snap["version"]), snap["lineage"]
+            snap.clear()
+            snap.update(target)
+            snap["lineage"] = lineage + [
+                {
+                    "kind": "admin",
+                    "op": "rollback",
+                    "to_version": int(target["version"]),
+                    "from_version": cur_version,
+                    "version": cur_version + 1,
+                }
+            ]
+        return cur_version + 1
 
     def reset_watermarks(self, buckets: list[int] | None = None) -> dict[int, int]:
         """Administratively clear per-bucket seq fences (all buckets, or a
@@ -612,29 +620,25 @@ class LakeTable:
         whose seqs restart below the applied fences.  Per-row ``_seq`` LWW
         still protects the data; only the optional retransmit fence is
         relaxed.  Returns the cleared {bucket: old_watermark}."""
-        snap = self.snapshot()
-        wms = {int(b): int(w) for b, w in snap["watermarks"].items()}
-        target = set(wms) if buckets is None else {int(b) for b in buckets}
-        cleared = {b: wms.pop(b) for b in sorted(target & set(wms))}
-        snap["watermarks"] = {str(b): w for b, w in sorted(wms.items())}
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "kind": "admin",
-                "op": "reset_watermarks",
-                "buckets": sorted(cleared),
-                "version": snap["version"],
-            }
-        )
-        self._write_snapshot(snap)
+        with self._commit() as snap:
+            wms = {int(b): int(w) for b, w in snap["watermarks"].items()}
+            target = set(wms) if buckets is None else {int(b) for b in buckets}
+            cleared = {b: wms.pop(b) for b in sorted(target & set(wms))}
+            snap["watermarks"] = {str(b): w for b, w in sorted(wms.items())}
+            snap["lineage"].append(
+                {
+                    "kind": "admin",
+                    "op": "reset_watermarks",
+                    "buckets": sorted(cleared),
+                    "version": snap["version"] + 1,
+                }
+            )
         return cleared
 
     def watermarks_df(self, spark: SparkSession) -> DataFrame:
         snap = self.snapshot()
         rows = [(int(b), int(w)) for b, w in snap["watermarks"].items()]
         schema = "_bucket int, _wm long"
-        if not rows:
-            return spark.createDataFrame([], schema)
         return spark.createDataFrame(rows, schema)
 
     def _all_lineage(self) -> list[dict[str, Any]]:
@@ -686,8 +690,6 @@ class LakeTable:
             "stream_id string, epoch_id long, version long, n_events long,"
             " n_upserts long, n_deletes long, wall_ms long, n_buckets int"
         )
-        if not rows:
-            return spark.createDataFrame([], schema)
         return spark.createDataFrame(rows, schema)
 
     def bucket_offsets_df(self, spark: SparkSession) -> DataFrame:
@@ -709,17 +711,12 @@ class LakeTable:
             "stream_id string, epoch_id long, partition_id int,"
             " n_rows long, max_seq long"
         )
-        if not rows:
-            return spark.createDataFrame([], schema)
         return spark.createDataFrame(rows, schema)
 
     def bucket_expr(self):
         snap = self.snapshot()
         return _bucket_expr(snap["key_col"], snap["num_buckets"])
 
-    # ------------------------------------------------------------------ #
-    # maintenance
-    # ------------------------------------------------------------------ #
     # ------------------------------------------------------------------ #
     # tags — named snapshot refs (Iceberg tag analog)
     # ------------------------------------------------------------------ #
@@ -766,54 +763,56 @@ class LakeTable:
 
         Without expiry, copy-on-write accumulates a full rewritten copy of
         every dirty bucket per commit — at 10^5 commits the table would
-        hold orders of magnitude more dead bytes than live.  Single-writer
-        contract: only files under versions ≤ CURRENT are candidates, so an
-        in-flight commit (always writing at CURRENT+1) is never touched.
-        Returns counts: {snapshots_removed, files_removed}.
+        hold orders of magnitude more dead bytes than live.  Expiry runs
+        under the writer lock (:meth:`_commit`; it never changes the
+        snapshot, so the block publishes nothing), so no writer can stage
+        or commit while the reachable set is computed and files are
+        deleted.  Returns counts: {snapshots_removed, files_removed}.
         """
-        current = int(self.snapshot()["version"])
-        keep = [v for v in self.versions() if v <= current][-max(1, keep_last):]
-        if current not in keep:
-            keep.append(current)
-        # tagged snapshots are pinned (Iceberg: refs block expiry)
-        for v in set(self.tags().values()):
-            if v not in keep and os.path.exists(
-                os.path.join(self.meta_dir, f"v{v}.json")
-            ):
-                keep.append(v)
-        reachable: set[str] = set()
-        for v in keep:
-            snap = self.snapshot(v)
-            for fl in snap["files"].values():
-                reachable.update(fl)
-            for fl in snap.get("deltas", {}).values():
-                reachable.update(fl)
-        files_removed = 0
-        data_root = os.path.join(self.root, DATA_DIR)
-        if os.path.isdir(data_root):
-            for dirpath, _dirnames, filenames in os.walk(data_root, topdown=False):
-                for fn in filenames:
-                    full = os.path.join(dirpath, fn)
-                    rel = os.path.relpath(full, self.root)
-                    commit_dir = rel.split(os.sep)[1]
-                    # only versions ≤ current are expire candidates
+        with self._commit() as snap:
+            current = int(snap["version"])
+            keep = [v for v in self.versions() if v <= current][-max(1, keep_last):]
+            if current not in keep:
+                keep.append(current)
+            # tagged snapshots are pinned (Iceberg: refs block expiry)
+            for v in set(self.tags().values()):
+                if v not in keep and os.path.exists(
+                    os.path.join(self.meta_dir, f"v{v}.json")
+                ):
+                    keep.append(v)
+            reachable: set[str] = set()
+            for v in keep:
+                kept = self.snapshot(v)
+                for fl in kept["files"].values():
+                    reachable.update(fl)
+                for fl in kept.get("deltas", {}).values():
+                    reachable.update(fl)
+            files_removed = 0
+            data_root = os.path.join(self.root, DATA_DIR)
+            if os.path.isdir(data_root):
+                for dirpath, _dirnames, filenames in os.walk(data_root, topdown=False):
+                    for fn in filenames:
+                        full = os.path.join(dirpath, fn)
+                        rel = os.path.relpath(full, self.root)
+                        commit_dir = rel.split(os.sep)[1]
+                        # only versions ≤ current are expire candidates
+                        try:
+                            cv = int(commit_dir.lstrip("cvd"))
+                        except ValueError:
+                            continue
+                        if cv <= current and rel not in reachable:
+                            os.unlink(full)
+                            files_removed += 1
                     try:
-                        cv = int(commit_dir.lstrip("cvd"))
-                    except ValueError:
-                        continue
-                    if cv <= current and rel not in reachable:
-                        os.unlink(full)
-                        files_removed += 1
-                try:
-                    os.rmdir(dirpath)  # remove now-empty dirs
-                except OSError:
-                    pass
-        snaps_removed = 0
-        for v in self.versions():
-            if v <= current and v not in keep:
-                os.unlink(os.path.join(self.meta_dir, f"v{v}.json"))
-                snaps_removed += 1
-        return {"snapshots_removed": snaps_removed, "files_removed": files_removed}
+                        os.rmdir(dirpath)  # remove now-empty dirs
+                    except OSError:
+                        pass
+            snaps_removed = 0
+            for v in self.versions():
+                if v <= current and v not in keep:
+                    os.unlink(os.path.join(self.meta_dir, f"v{v}.json"))
+                    snaps_removed += 1
+            return {"snapshots_removed": snaps_removed, "files_removed": files_removed}
 
 
 def _parse_type(ddl: str) -> T.DataType:

@@ -31,6 +31,7 @@ existing table is never shuffled.  Backpressure = ``maxFilesPerTrigger``
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -41,9 +42,12 @@ from pyspark.sql import types as T
 from binlake_spark.changelog.generator import CHANGE_LOG_SCHEMA
 from binlake_spark.lake.merge import (
     MergeResult,
+    _footer_stats,
+    bootstrap_snapshot,
     compact_buckets,
     merge_into,
     merge_into_mor,
+    purge_tombstones,
 )
 from binlake_spark.lake.table import LakeTable
 from binlake_spark.operators.compaction import compact_lww, compact_lww_bucketed
@@ -70,26 +74,14 @@ class ResumeAheadOfLog(RuntimeError):
 def _source_footer_stats(source_dir: str) -> tuple[int, int] | None:
     """(n_events, max_seq) of a change-log dir from parquet footers —
     driver-side metadata only, no Spark job.  None when unreadable."""
+    paths = glob.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
     try:
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        n, mx = 0, -1
-        paths = _glob.glob(os.path.join(source_dir, "**", "*.parquet"), recursive=True)
-        if not paths:
-            return None
-        for p in paths:
-            md = _pq.read_metadata(p)
-            n += md.num_rows
-            idx = md.schema.to_arrow_schema().get_field_index("seq")
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(idx)
-                if col.statistics is not None and col.statistics.has_min_max:
-                    mx = max(mx, int(col.statistics.max))
-        return n, mx
+        stats = [_footer_stats(p, "seq") for p in paths]
     except Exception:
         return None
+    if not stats:
+        return None
+    return sum(n for n, _ in stats), max(mx for _, mx in stats)
 
 
 class CdcEngine:
@@ -511,8 +503,6 @@ class CdcEngine:
         (or a full replay — the per-bucket fence at ``as_of_seq`` plus
         per-row LWW makes re-applying the prefix a no-op).  See
         :func:`binlake_spark.lake.merge.bootstrap_snapshot`."""
-        from binlake_spark.lake.merge import bootstrap_snapshot
-
         return bootstrap_snapshot(
             spark,
             self.table,
@@ -686,8 +676,6 @@ class CdcEngine:
         caller's judgment: pick a seq no replay or retransmit can reach
         below (e.g. the committed low watermark after checkpoint
         expiry)."""
-        from binlake_spark.lake.merge import compact_buckets, purge_tombstones
-
         if self.mode == "mor":
             compact_buckets(spark, self.table, tombstone_horizon=horizon_seq)
         return purge_tombstones(spark, self.table, horizon_seq)
