@@ -171,6 +171,7 @@ def merge_into(
     bucket_max_seq: dict[int, int] | None = None,
     assume_persisted: bool = False,
     bucket_aligned: bool = False,
+    num_buckets: int | None = None,
     extra_lineage: dict | None = None,
 ) -> MergeResult:
     """Apply one compacted change batch to the table, exactly once.
@@ -180,19 +181,23 @@ def merge_into(
     seq in the same metadata job that detects schema evolution, and hands
     over an already-persisted ``net`` (with ``_bucket`` attached), so the
     merge adds no extra pass of its own; when absent they are computed
-    here in one small aggregation over ``net``.  The watermark fence
-    advances each bucket by *its own* max — never the epoch-global max,
-    which would wrongly fence fresh events from sources that are only
-    per-bucket monotone.  ``extra_lineage`` fields (e.g. per-phase stage
-    delays, the PerformanceUtils analog) are embedded in the committed
-    lineage entry.
+    here in one small aggregation over ``net``.  ``num_buckets`` is the
+    bucket count those hints (and ``bucket_aligned``) were computed with;
+    the merge trusts them only if the table still has that count once it
+    holds the writer lock — otherwise (a rebucket committed in between, or
+    no count given) ``_bucket`` and the hints are re-derived here.  The
+    watermark fence advances each bucket by *its own* max — never the
+    epoch-global max, which would wrongly fence fresh events from sources
+    that are only per-bucket monotone.  ``extra_lineage`` fields (e.g.
+    per-phase stage delays, the PerformanceUtils analog) are embedded in
+    the committed lineage entry.
     """
     return _merge(
         spark, table, net, mor=False, epoch_id=epoch_id, stream_id=stream_id,
         seq_col=seq_col, op_col=op_col, enforce_watermark=enforce_watermark,
         dirty=dirty, bucket_max_seq=bucket_max_seq,
         assume_persisted=assume_persisted, bucket_aligned=bucket_aligned,
-        extra_lineage=extra_lineage,
+        num_buckets=num_buckets, extra_lineage=extra_lineage,
     )
 
 
@@ -209,6 +214,7 @@ def merge_into_mor(
     bucket_max_seq: dict[int, int] | None = None,
     assume_persisted: bool = False,
     bucket_aligned: bool = False,
+    num_buckets: int | None = None,
     extra_lineage: dict | None = None,
 ) -> MergeResult:
     """Merge-on-read apply: append the compacted net changes (upserts AND
@@ -224,14 +230,15 @@ def merge_into_mor(
     deltas down (Iceberg v2 positional/equality deletes play the same
     trade).  Exactly-once layering is unchanged: epoch guard + per-row
     ``_seq`` (stale retransmitted deltas lose the read-time max_by; a
-    replayed epoch is skipped outright).
+    replayed epoch is skipped outright).  The bucketing hints behave as
+    in :func:`merge_into`.
     """
     return _merge(
         spark, table, net, mor=True, epoch_id=epoch_id, stream_id=stream_id,
         seq_col=seq_col, op_col=op_col, enforce_watermark=False,
         dirty=dirty, bucket_max_seq=bucket_max_seq,
         assume_persisted=assume_persisted, bucket_aligned=bucket_aligned,
-        extra_lineage=extra_lineage,
+        num_buckets=num_buckets, extra_lineage=extra_lineage,
     )
 
 
@@ -250,21 +257,28 @@ def _merge(
     bucket_max_seq: dict[int, int] | None,
     assume_persisted: bool,
     bucket_aligned: bool,
+    num_buckets: int | None,
     extra_lineage: dict | None,
 ) -> MergeResult:
     """The body both merge modes share; they differ only in the rows they
     stage (:func:`_cow_rows` / :func:`_mor_rows`) and in the file map the
     staged files land in (``files`` replaced / ``deltas`` appended)."""
     t0 = time.monotonic()
-    with table._commit() as snap:
+    with table._commit() as (snap, version):
         # -- 1. epoch idempotence guard --------------------------------- #
         if epoch_id <= int(snap["epochs"].get(stream_id, -1)):
             return MergeResult(
                 applied=False, epoch_id=epoch_id, skipped_reason="epoch-already-applied"
             )
-        key, num_buckets = snap["key_col"], snap["num_buckets"]
-        if "_bucket" not in net.columns:
-            net = net.withColumn("_bucket", _bucket_expr(key, num_buckets))
+        if num_buckets != snap["num_buckets"] or "_bucket" not in net.columns:
+            # the caller's bucketing is absent, or predates a rebucket that
+            # committed while this writer waited for the lock: re-derive
+            # ``_bucket`` and the hints that depend on it
+            net = net.withColumn(
+                "_bucket", _bucket_expr(snap["key_col"], snap["num_buckets"])
+            )
+            dirty = bucket_max_seq = None
+            bucket_aligned = False
 
         # -- 2. optional retransmit fence (bucket-monotone sources only) - #
         if enforce_watermark and snap["watermarks"]:
@@ -297,7 +311,6 @@ def _merge(
                     if r["_mx"] is not None
                 }
             dirty = sorted(int(b) for b in dirty)
-            version = snap["version"] + 1
             snap["epochs"][stream_id] = epoch_id
             entry = {
                 "kind": "merge",
@@ -514,13 +527,12 @@ def compact_buckets(
     :func:`purge_tombstones` (already-compacted buckets no longer carry
     dead tombstones and are skipped by its discovery scan).
     """
-    with table._commit() as snap:
+    with table._commit() as (snap, version):
         todo = sorted(
             int(b) for b, fl in snap.get("deltas", {}).items() if len(fl) >= min_deltas
         )
         if not todo:
             return {"compacted_buckets": 0, "version": snap["version"]}
-        version = snap["version"] + 1
         # delete winners fold into the base AS TOMBSTONES — dropping them
         # here would let a stale upsert from a reordered/replayed batch
         # resurrect the doc right after compaction (reads filter them;
@@ -569,7 +581,7 @@ def purge_tombstones(
     Scale: one filter scan to find affected buckets, then a
     manifest-pruned rewrite of only those buckets.
     """
-    with table._commit() as snap:
+    with table._commit() as (snap, version):
         outstanding = sorted(
             int(b) for b, fl in (snap.get("deltas") or {}).items() if fl
         )
@@ -592,7 +604,6 @@ def purge_tombstones(
         )
         if not todo:
             return {"purged_buckets": 0, "version": int(snap["version"])}
-        version = int(snap["version"]) + 1
         # manifest-pruned: only the affected buckets' files are scanned
         # for the rewrite (the discovery scan above is the one full pass)
         kept = (
@@ -640,11 +651,10 @@ def rebucket(
     guards (exactly-once) are unaffected.
     """
     new_b = int(new_num_buckets)
-    with table._commit() as snap:
+    with table._commit() as (snap, version):
         old_b = int(snap["num_buckets"])
         if new_b == old_b:
             return {"rebucketed": False, "version": int(snap["version"])}
-        version = int(snap["version"]) + 1
         # tombstones migrate to their new buckets with everything else —
         # the per-key fence must survive the layout change
         moved = (
@@ -735,7 +745,7 @@ def bootstrap_snapshot(
     if extra:
         table.add_columns(extra)
 
-    with table._commit() as snap:
+    with table._commit() as (snap, version):
         _require_empty(snap)  # another writer may have filled it meanwhile
         num_buckets = snap["num_buckets"]
         seq_expr = F.col(seq_col) if seq_col else F.lit(int(as_of_seq))
@@ -743,7 +753,6 @@ def bootstrap_snapshot(
             *_aligned(snapshot_df, T.StructType.fromJson(snap["schema"])),
             seq_expr.cast("long").alias("_seq"),
         ).withColumn("_b", _bucket_expr(snap["key_col"], num_buckets))
-        version = snap["version"] + 1
         staged, _ = _stage(
             table,
             aligned.repartition(num_buckets, "_b"),

@@ -210,19 +210,21 @@ class LakeTable:
     @contextlib.contextmanager
     def _commit(self):
         """The one read-modify-write path of the snapshot: take the writer
-        lock, yield the current snapshot for mutation, and on a clean exit
-        publish it as the next version.  A body that leaves the snapshot
-        as it found it, or raises, publishes nothing.  Writers stage data
-        inside the block, so ``data/<kind><next version>`` is theirs
-        alone.  The ``flock`` is not reentrant: a writer called inside
-        another writer's block waits on itself forever."""
+        lock and yield ``(snapshot, next_version)`` for mutation.  A body
+        that commits appends one lineage entry stamped ``next_version``;
+        on a clean exit that entry publishes the snapshot as
+        ``next_version``.  A body that appends none, or raises, publishes
+        nothing.  Writers stage data inside the block, so
+        ``data/<kind><next_version>`` is theirs alone.  The ``flock`` is
+        not reentrant: a writer called inside another writer's block waits
+        on itself forever."""
         with open(os.path.join(self.meta_dir, LOCK), "a") as lock:
             fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
             snap = self.snapshot()
-            version, before = snap["version"], json.dumps(snap)
-            yield snap
-            if json.dumps(snap) != before:
-                snap["version"] = version + 1
+            version, n_entries = snap["version"] + 1, len(snap["lineage"])
+            yield snap, version
+            if len(snap["lineage"]) > n_entries:
+                snap["version"] = version
                 self._write_snapshot(snap)
 
     # ------------------------------------------------------------------ #
@@ -240,7 +242,7 @@ class LakeTable:
         reader fills NULLs — exactly Iceberg's lazy evolution.
         Returns True if the schema changed.
         """
-        with self._commit() as snap:
+        with self._commit() as (snap, version):
             schema = T.StructType.fromJson(snap["schema"])
             added = []
             for name, ddl in cols:
@@ -250,7 +252,7 @@ class LakeTable:
             if added:
                 snap["schema"] = schema.jsonValue()
                 snap["lineage"].append(
-                    {"kind": "alter", "version": snap["version"] + 1, "added": added}
+                    {"kind": "alter", "version": version, "added": added}
                 )
         return bool(added)
 
@@ -567,7 +569,7 @@ class LakeTable:
         makes every replayed change a no-op or a legitimate newer write.
         Committed as a versioned ``admin`` lineage entry — auditable and
         atomic like every other commit."""
-        with self._commit() as snap:
+        with self._commit() as (snap, version):
             prev = int(snap["epochs"].get(stream_id, -1))
             snap["epochs"][stream_id] = int(epoch_id)
             snap["lineage"].append(
@@ -577,7 +579,7 @@ class LakeTable:
                     "stream_id": stream_id,
                     "from": prev,
                     "to": int(epoch_id),
-                    "version": snap["version"] + 1,
+                    "version": version,
                 }
             )
         return prev
@@ -598,9 +600,8 @@ class LakeTable:
         protects against any stragglers), and ``read_changes`` across
         the rollback commit emits the net UNDO diff for downstream feed
         consumers.  Returns the new version number."""
-        with self._commit() as snap:
-            target = self.snapshot(version)
-            cur_version, lineage = int(snap["version"]), snap["lineage"]
+        with self._commit() as (snap, new_version):
+            target, lineage = self.snapshot(version), snap["lineage"]
             snap.clear()
             snap.update(target)
             snap["lineage"] = lineage + [
@@ -608,11 +609,11 @@ class LakeTable:
                     "kind": "admin",
                     "op": "rollback",
                     "to_version": int(target["version"]),
-                    "from_version": cur_version,
-                    "version": cur_version + 1,
+                    "from_version": new_version - 1,
+                    "version": new_version,
                 }
             ]
-        return cur_version + 1
+        return new_version
 
     def reset_watermarks(self, buckets: list[int] | None = None) -> dict[int, int]:
         """Administratively clear per-bucket seq fences (all buckets, or a
@@ -620,7 +621,7 @@ class LakeTable:
         whose seqs restart below the applied fences.  Per-row ``_seq`` LWW
         still protects the data; only the optional retransmit fence is
         relaxed.  Returns the cleared {bucket: old_watermark}."""
-        with self._commit() as snap:
+        with self._commit() as (snap, version):
             wms = {int(b): int(w) for b, w in snap["watermarks"].items()}
             target = set(wms) if buckets is None else {int(b) for b in buckets}
             cleared = {b: wms.pop(b) for b in sorted(target & set(wms))}
@@ -630,7 +631,7 @@ class LakeTable:
                     "kind": "admin",
                     "op": "reset_watermarks",
                     "buckets": sorted(cleared),
-                    "version": snap["version"] + 1,
+                    "version": version,
                 }
             )
         return cleared
@@ -764,12 +765,12 @@ class LakeTable:
         Without expiry, copy-on-write accumulates a full rewritten copy of
         every dirty bucket per commit — at 10^5 commits the table would
         hold orders of magnitude more dead bytes than live.  Expiry runs
-        under the writer lock (:meth:`_commit`; it never changes the
-        snapshot, so the block publishes nothing), so no writer can stage
+        under the writer lock (:meth:`_commit`; it appends no lineage
+        entry, so the block publishes nothing), so no writer can stage
         or commit while the reachable set is computed and files are
         deleted.  Returns counts: {snapshots_removed, files_removed}.
         """
-        with self._commit() as snap:
+        with self._commit() as (snap, _):
             current = int(snap["version"])
             keep = [v for v in self.versions() if v <= current][-max(1, keep_last):]
             if current not in keep:

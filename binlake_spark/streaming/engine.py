@@ -49,7 +49,7 @@ from binlake_spark.lake.merge import (
     merge_into_mor,
     purge_tombstones,
 )
-from binlake_spark.lake.table import LakeTable
+from binlake_spark.lake.table import LakeTable, _bucket_expr
 from binlake_spark.operators.compaction import compact_lww, compact_lww_bucketed
 from binlake_spark.operators.decode import (
     decode_and_validate,
@@ -279,6 +279,12 @@ class CdcEngine:
             or n_events_hint <= self.broadcast_winner_limit
         )
 
+        # one snapshot read fixes the bucket count this epoch's winners are
+        # bucketed with; the merge re-derives the bucketing if a rebucket
+        # commits before it takes the writer lock
+        layout = self.table.snapshot()
+        num_buckets = int(layout["num_buckets"])
+        bucket_expr = _bucket_expr(layout["key_col"], num_buckets)
         bucket_aligned = False
         if self.salt:
             net = compact_lww(
@@ -303,8 +309,8 @@ class CdcEngine:
                 df,
                 key="doc_id",
                 seq_col="seq",
-                bucket_col_expr=self.table.bucket_expr(),
-                num_partitions=int(self.table.snapshot()["num_buckets"]),
+                bucket_col_expr=bucket_expr,
+                num_partitions=num_buckets,
                 broadcast_winners=bw,
                 batch_fn=batch_fn,
                 out_schema=out_schema,
@@ -314,7 +320,7 @@ class CdcEngine:
         # attach the target bucket (bucketed compaction already carries it)
         # so one metadata job covers dirty buckets + schema evolution
         if "_bucket" not in net.columns:
-            net = net.withColumn("_bucket", self.table.bucket_expr())
+            net = net.withColumn("_bucket", bucket_expr)
 
         phases: dict[str, int] = {}
         t0 = time.monotonic()
@@ -406,6 +412,7 @@ class CdcEngine:
                 bucket_max_seq=bucket_max,
                 assume_persisted=True,
                 bucket_aligned=bucket_aligned,
+                num_buckets=num_buckets,
                 extra_lineage={"phase_ms": phases},
             )
             # 6. periodic maintenance, in the engine loop like the

@@ -9,13 +9,20 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from binlake_spark.changelog import GenSpec, generate_change_log, write_change_log
+from binlake_spark.changelog.generator import CHANGE_LOG_SCHEMA
 from binlake_spark.lake import (
     LakeTable,
     compact_buckets,
     merge_into,
     merge_into_mor,
     purge_tombstones,
+    rebucket,
 )
+from binlake_spark.lake.table import _bucket_expr
+from binlake_spark.streaming import CdcEngine
+from binlake_spark.streaming import engine as engine_mod
+from tests.test_engine_replay import assert_state_equals_oracle
 
 SCHEMA = T.StructType(
     [
@@ -46,6 +53,22 @@ def _state(spark, t):
 
 def _oracle(*row_sets):
     return sorted((d, tok, n, src) for rows in row_sets for d, _, _, tok, n, src in rows)
+
+
+def _misfiled(spark, t):
+    """Bucket ids in the manifest that are out of range, or whose rows do
+    not hash to them under the table's current bucket count."""
+    snap = t.snapshot()
+    nb = snap["num_buckets"]
+    ids = sorted({int(b) for m in ("files", "deltas") for b in snap[m]})
+    return [
+        b
+        for b in ids
+        if b >= nb
+        or t.read(spark, buckets=[b], with_tombstones=True)
+        .filter(_bucket_expr("doc_id", nb) != b)
+        .count()
+    ]
 
 
 def _race(*calls, timeout=300):
@@ -141,3 +164,73 @@ def test_failed_write_releases_the_lock(spark, tmp_path):
     assert rb.applied and rb.version == 1
     assert t.snapshot()["epochs"] == {"B": 0}
     assert _state(spark, t) == _oracle(b)
+
+
+@pytest.mark.parametrize("mor", [False, True], ids=["cow", "mor"])
+def test_bucket_hinted_merge_vs_rebucket(spark, tmp_path, mor):
+    """A merge carrying the engine's bucketing hints for 4 buckets races a
+    rebucket to 3; whichever commits first, the merge must land every row
+    under the bucket count it commits against."""
+    merge_fn = merge_into_mor if mor else merge_into
+    t = LakeTable.create(str(tmp_path / "t"), SCHEMA, "doc_id", num_buckets=4)
+    seed, b = _rows("s", 1), _rows("b", 10_001)
+    merge_fn(spark, t, _net(spark, seed), epoch_id=0, stream_id="seed")
+    net = (
+        _net(spark, b)
+        .withColumn("_bucket", _bucket_expr("doc_id", 4))
+        .repartition(4, "_bucket")
+        .persist()
+    )
+    meta = net.groupBy("_bucket").agg(F.max("seq").alias("mx")).collect()
+    hints = {
+        "dirty": [r["_bucket"] for r in meta],
+        "bucket_max_seq": {r["_bucket"]: r["mx"] for r in meta},
+        "assume_persisted": True,
+        "bucket_aligned": True,
+        "num_buckets": 4,
+    }
+    try:
+        rb, moved = _race(
+            lambda: merge_fn(spark, t, net, epoch_id=0, stream_id="B", **hints),
+            lambda: rebucket(spark, t, 3),
+        )
+    finally:
+        net.unpersist()
+    assert rb.applied and moved["rebucketed"]
+    assert t.snapshot()["epochs"] == {"seed": 0, "B": 0}
+    assert t.snapshot()["num_buckets"] == 3
+    assert _state(spark, t) == _oracle(seed, b)
+    assert _misfiled(spark, t) == []
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_engine_merge_queued_behind_rebucket(spark, tmp_path, monkeypatch, mode):
+    """The engine buckets an epoch's winners before its merge takes the
+    writer lock; a rebucket that commits in between must not leave the
+    epoch's rows under the old layout."""
+    pdf = generate_change_log(GenSpec(n_docs=60, n_events=1000))
+    cut = int(pdf["seq"].quantile(0.5))
+    write_change_log(pdf, str(tmp_path / "log"))
+    df = spark.read.schema(CHANGE_LOG_SCHEMA).parquet(str(tmp_path / "log"))
+    t = CdcEngine.create_table(str(tmp_path / "docs"), num_buckets=4)
+    engine = CdcEngine(t, mode=mode, mor_compact_every=10**6)
+    engine.apply_batch(df.filter(F.col("seq") <= cut), epoch_id=0)
+    # epoch 1 dirties one old bucket only, so a merge that kept the old
+    # bucketing would rewrite (COW) or file (MOR) the wrong buckets
+    tail = df.filter((F.col("seq") > cut) & (_bucket_expr("doc_id", 4) == 0))
+    kept = {r["seq"] for r in tail.select("seq").collect()}
+    assert kept
+
+    name = "merge_into_mor" if mode == "mor" else "merge_into"
+    merge_fn = getattr(engine_mod, name)
+
+    def queued_behind_rebucket(spark, table, net, **kw):
+        rebucket(spark, table, 3)  # wins the lock first
+        return merge_fn(spark, table, net, **kw)
+
+    monkeypatch.setattr(engine_mod, name, queued_behind_rebucket)
+    res = engine.apply_batch(tail, epoch_id=1)
+    assert res.applied
+    assert t.snapshot()["num_buckets"] == 3
+    assert_state_equals_oracle(spark, engine, pdf[(pdf["seq"] <= cut) | pdf["seq"].isin(kept)])
+    assert _misfiled(spark, t) == []
